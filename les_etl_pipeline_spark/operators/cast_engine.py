@@ -25,16 +25,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def cast_expr(colname: str, dtype: T.DataType, legacy_bool_null_false: bool = True) -> Column:
+def cast_expr(colname: str, dtype: T.DataType) -> Column:
     """Build the cast expression for one column per reference semantics."""
     c = F.col(colname)
     if isinstance(dtype, T.BooleanType):
         # silver_funcs.py:24-27 — exact match on 'y' (ingest already
-        # lowercased, F11); null -> False (diverges from SQL 3VL; pass
-        # legacy_bool_null_false=False for NULL-preserving casts)
-        expr = F.when(c.cast("string") == "y", F.lit(True)).otherwise(
-            F.lit(False) if legacy_bool_null_false else F.when(c.isNull(), None).otherwise(False)
-        )
+        # lowercased, F11); null -> False (diverges from SQL 3VL)
+        expr = F.when(c.cast("string") == "y", F.lit(True)).otherwise(F.lit(False))
     elif isinstance(dtype, T.DateType):
         # silver_funcs.py:28-29 — to_date(c) with no format IS cast-to-date;
         # try_cast keeps the malformed->NULL contract under ANSI
@@ -52,12 +49,12 @@ def cast_expr(colname: str, dtype: T.DataType, legacy_bool_null_false: bool = Tr
     return expr.alias(colname)
 
 
-def cast_to_datatype(df: DataFrame, cast_map: dict[str, T.DataType], **kw) -> DataFrame:
+def cast_to_datatype(df: DataFrame, cast_map: dict[str, T.DataType]) -> DataFrame:
     """Apply a {column: DataType} cast map in one projection; columns not
     in the map pass through unchanged. Missing columns are skipped (files
     may carry column subsets — generate_asset_silver.py:31-44)."""
     exprs = [
-        cast_expr(c, cast_map[c], **kw) if c in cast_map else F.col(c)
+        cast_expr(c, cast_map[c]) if c in cast_map else F.col(c)
         for c in df.columns
     ]
     return df.select(*exprs)

@@ -31,6 +31,8 @@ operator from the build brief).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -50,9 +52,17 @@ def _assign(e: DataFrame, cents: dict[int, list[float]]) -> DataFrame:
     (575 -> 101 ms per tree, r15 guide §1.2; every Lloyd iteration,
     IVF build and streaming-ANN drain constructs such a tree). ``!r``
     keeps the exact IEEE doubles; ``D`` suffixes keep Spark SQL from
-    parsing the literals as DECIMAL."""
+    parsing the literals as DECIMAL.
+
+    A NaN or infinite component has no such literal, and a NaN distance
+    would floor to 0 in the 6dp rounding and win every argmin, so it
+    raises ValueError instead of failing the SQL parse."""
     choices = []
     for c in sorted(cents):
+        if not all(math.isfinite(x) for x in cents[c]):
+            raise ValueError(
+                f"centroid {c} has a non-finite component (NaN or inf input vectors?)"
+            )
         arr = "array(" + ",".join(f"{float(x)!r}D" for x in cents[c]) + ")"
         fold = (
             f"aggregate(zip_with(v, {arr}, (x, y) -> (x - y) * (x - y)), "

@@ -16,6 +16,9 @@ Semantics preserved:
 
 from __future__ import annotations
 
+import os
+import re
+
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -45,36 +48,45 @@ def normalize_cells(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     )
 
 
+#: EDW file names are {ed_code}_{YYYY}_{MM}_{DD}_*.csv (bronze_funcs.py:108-110);
+#: the Spark (lineage_from_filename) and driver (key_from_filename) parses
+#: share these two patterns
+ED_CODE_PATTERN = r"^([^_]+)_"
+PCD_PATTERN = r"^[^_]+_(\d{4})_(\d{2})_(\d{2})"
+
+
 def lineage_from_filename(df: DataFrame) -> DataFrame:
     """F13: derive filename / ed_code / pcd columns from the scanned file
-    path ({ed_code}_{YYYY}_{MM}_{DD}_*.csv), fully distributed via
-    input_file_name()."""
+    path, fully distributed via input_file_name()."""
     fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
     return (
         df.withColumn("filename", fname)
-        .withColumn("ed_code", F.regexp_extract(fname, r"^([^_]+)_", 1))
+        .withColumn("ed_code", F.regexp_extract(fname, ED_CODE_PATTERN, 1))
         .withColumn(
             "pcd",
-            F.concat_ws(
-                "-",
-                F.regexp_extract(fname, r"^[^_]+_(\d{4})_(\d{2})_(\d{2})", 1),
-                F.regexp_extract(fname, r"^[^_]+_(\d{4})_(\d{2})_(\d{2})", 2),
-                F.regexp_extract(fname, r"^[^_]+_(\d{4})_(\d{2})_(\d{2})", 3),
-            ),
+            F.concat_ws("-", *[F.regexp_extract(fname, PCD_PATTERN, i) for i in (1, 2, 3)]),
         )
     )
 
 
-def checksum(primary_cols: list[str], null_safe: bool = True) -> Column:
+def key_from_filename(path: str) -> tuple[str, str]:
+    """The (ed_code, pcd) that lineage_from_filename gives the rows of the
+    file at ``path``, parsed on the driver from its name — what the run
+    ledger records and the bronze skip filter compares, with no scan."""
+    name = os.path.basename(path)
+    ed = re.match(ED_CODE_PATTERN, name, re.ASCII)
+    pcd = re.match(PCD_PATTERN, name, re.ASCII)
+    return (ed.group(1) if ed else "", "-".join(pcd.groups() if pcd else ("", "", "")))
+
+
+def checksum(primary_cols: list[str]) -> Column:
     """F1 row checksum over (ed_code, pcd, primary cols).
 
     The reference's concat() nulls the whole checksum when any key part is
-    null (SURVEY.md §7.4(3)); default is the null-safe concat_ws fix,
-    fidelity mode available with null_safe=False."""
+    null (SURVEY.md §7.4(3)); concat_ws over a unit separator keeps it
+    null-safe."""
     cols = [F.col("ed_code"), F.col("pcd"), *[F.col(c) for c in primary_cols]]
-    if null_safe:
-        return F.md5(F.concat_ws("\x1f", *[c.cast("string") for c in cols]))
-    return F.md5(F.concat(*[c.cast("string") for c in cols]))
+    return F.md5(F.concat_ws("\x1f", *[c.cast("string") for c in cols]))
 
 
 def part_key() -> Column:
@@ -83,14 +95,14 @@ def part_key() -> Column:
     return F.concat(F.col("ed_code"), F.lit("_"), F.regexp_replace("pcd", "-", ""))
 
 
-def scd2_stamp(df: DataFrame, primary_cols: list[str], null_safe_checksum: bool = True) -> DataFrame:
+def scd2_stamp(df: DataFrame, primary_cols: list[str]) -> DataFrame:
     """F1-F6 initial-load SCD2 stamping (bronze_funcs.py:129-140)."""
     return df.withColumns(
         {
             "valid_from": F.current_timestamp(),
             "valid_to": F.lit(None).cast("timestamp"),
             "iscurrent": F.lit(1),
-            "checksum": checksum(primary_cols, null_safe_checksum),
+            "checksum": checksum(primary_cols),
             "part": part_key(),
         }
     )

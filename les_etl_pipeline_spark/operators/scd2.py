@@ -14,9 +14,9 @@ and implements the missing semantics (SURVEY.md §7.4(1)):
 - re-run idempotence: applying the same batch twice is a no-op (equal
   checksums -> no close-out, no insert)
 
-Implementation is a pure DataFrame transform (storage-agnostic; one
-shuffle on the business key). With Delta available, `delta_merge` runs
-the same semantics as a transactional MERGE.
+Implementation is a pure DataFrame transform (one shuffle on the
+business key): the bronze stage reads the old parquet table, merges, and
+overwrites the touched partitions with the result.
 """
 
 from __future__ import annotations
@@ -108,28 +108,3 @@ def current_snapshot(df: DataFrame) -> DataFrame:
         "valid_from", "valid_to", "checksum", "iscurrent"
     )
 
-
-def delta_merge(spark, delta_path: str, new: DataFrame, primary_cols: list[str]) -> None:
-    """Transactional variant via Delta MERGE (same semantics, ACID
-    close-out + append). Requires delta-spark; raises ImportError where
-    unavailable (this container has none — the DataFrame path above is
-    the tested implementation)."""
-    from delta.tables import DeltaTable  # gated import
-
-    key = _key(primary_cols)
-    new = _one_row_per_key(new, key)
-    cond = " AND ".join(f"old.{k} <=> new.{k}" for k in key)
-    tbl = DeltaTable.forPath(spark, delta_path)
-    (
-        tbl.alias("old")
-        .merge(new.alias("new"), f"{cond} AND old.iscurrent = 1")
-        .whenMatchedUpdate(
-            condition="old.checksum != new.checksum",
-            set={"valid_to": "current_timestamp()", "iscurrent": "0"},
-        )
-        .execute()
-    )
-    # append incoming new/changed rows as current versions
-    cur = spark.read.format("delta").load(delta_path).where("iscurrent = 1")
-    news = new.join(cur.select(*key, "checksum"), key, "left_anti")
-    news.write.format("delta").mode("append").save(delta_path)

@@ -221,9 +221,15 @@ def profile_data(
     strict_columns: bool = True,
     lineage_cols: tuple[str, ...] = (),
     cerberus_messages: bool = False,
-) -> tuple[DataFrame, DataFrame]:
-    """Split df into (good, bad) per the rule schema — the reference's
+) -> DataFrame:
+    """Flag every row of df per the rule schema — the reference's
     profile_data (silver_funcs.py:37-78) without the RDD round-trip.
+
+    Returns df plus ``flag`` (True iff the row passes every rule) and
+    ``qc_errors``; ``split_flagged`` turns it into the reference's
+    (good, bad) pair. Keeping the flagged frame whole lets a caller
+    persist it once and feed every consumer of the split from that one
+    validation pass.
 
     ``lineage_cols`` are exempt from the unknown-column strictness (the
     reference adds its common lineage schema for them,
@@ -235,7 +241,12 @@ def profile_data(
         effective, strict_columns=strict_columns, df_columns=df.columns,
         df_schema=df.schema, cerberus_messages=cerberus_messages,
     )
-    flagged = df.withColumn("flag", flag).withColumn("qc_errors", qc_errors)
+    return df.withColumn("flag", flag).withColumn("qc_errors", qc_errors)
+
+
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(good, bad) of a ``profile_data`` frame: the passing rows without
+    the validation columns, and the failing rows with their qc_errors."""
     good = flagged.filter(F.col("flag")).drop("flag", "qc_errors")
     bad = flagged.filter(~F.col("flag")).drop("flag")
     return good, bad

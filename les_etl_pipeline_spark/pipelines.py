@@ -4,13 +4,19 @@ generate_deal_details_bronze / generate_*_silver) collapsed into library
 calls on one SparkSession (SURVEY.md §3: the per-deal Dataproc-batch
 boundary disappears; `part` partitioning provides the same isolation).
 
-Key structural differences from the reference, by design (SURVEY.md §4.2):
-- all deals/files process as ONE partitioned DataFrame job, not a driver
-  loop over files with per-file createDataFrame
-- the validated DataFrame is persisted once and shared across the
-  good/bad split and every topic write (the reference recomputed the
-  Python validation pass per consumer)
-- SCD2 merge is real (operators/scd2.py) instead of dead perform_scd2
+Each stage is one read -> transform -> write over parquet:
+- bronze: all deals/files as ONE partitioned DataFrame job (not a driver
+  loop over files with per-file createDataFrame) -> SCD2 stamp -> merge
+  with the existing table (operators/scd2.py; the reference's
+  perform_scd2 was dead) -> partitioned write. The run ledger is read
+  once to skip done files and appended once per batch, both keyed on
+  the file names, so it never re-scans the input.
+- silver: current snapshot -> validation flags, persisted once -> ONE
+  aggregate for the QC counters (it also fills the cache) -> quarantine
+  write if any row is bad -> cast + topic writes if any row is good. The
+  reference recomputed its Python validation pass per consumer and
+  probed the bad frame for emptiness before writing; here every consumer
+  reads the one validated frame and the counts replace the probe.
 - writes fail loudly (no retry-swallow)
 """
 
@@ -18,18 +24,41 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from . import schemas
 from .operators import scd2 as scd2_ops
 from .operators.cast_engine import cast_to_datatype
-from .operators.normalize import scd2_stamp
-from .operators.validation import profile_data
+from .operators.normalize import key_from_filename, scd2_stamp
+from .operators.validation import profile_data, split_flagged
 from .operators.vertical import range_columns, topic_tables
 from .sinks.writers import RunLedger, write_partitioned, write_quarantine
 from .sources.csv_ingest import list_csv_files, read_edw_csv
 from .sources.xml_ingest import read_deal_details
+
+
+def _stamp_merge_write(
+    spark: SparkSession, df: DataFrame, payload: list[str], out_path: str, data_type: str
+) -> DataFrame:
+    """SCD2-stamp ``df`` with a checksum over ``payload`` (change
+    detection), merge it into the bronze table at ``out_path`` if one
+    exists (keyed on schemas.MERGE_KEYS — see note there), and write."""
+    stamped = scd2_stamp(df, payload)
+    if os.path.exists(out_path):
+        old = spark.read.parquet(out_path)
+        stamped = scd2_ops.scd2_merge(old, stamped.select(*old.columns),
+                                      schemas.MERGE_KEYS[data_type])
+    write_partitioned(stamped, out_path)
+    return stamped
+
+
+def _current(spark: SparkSession, bronze_path: str, part: str | None) -> DataFrame:
+    """The bronze table's current rows, restricted to one part if given."""
+    bronze = spark.read.parquet(bronze_path)
+    if part is not None:
+        bronze = bronze.where(F.col("part") == part)  # partition-pruned scan (S6/P1)
+    return scd2_ops.current_snapshot(bronze)
 
 
 def bronze_csv(
@@ -44,9 +73,8 @@ def bronze_csv(
     """Bronze load for assets/bond_info: discover -> distributed read ->
     normalize -> SCD2 stamp -> merge with existing -> partitioned write."""
     paths = list_csv_files(raw_prefix, file_key, data_type)
-    if not paths:
-        return None
-    if ledger is not None and ingestion_date:
+    tracked = ledger is not None and bool(ingestion_date)
+    if paths and tracked:
         # S3/O4 idempotence guard: skip files whose (ed_code, pcd) already
         # ran this date — keying on ed_code alone would wrongly skip a
         # later file for the same deal with a new pool-cutoff date
@@ -56,32 +84,15 @@ def bronze_csv(
             .where(F.col("ingestion_date") == ingestion_date)
             .collect()
         }
-
-        def _file_key(p: str) -> tuple[str, str]:
-            # {ed_code}_{YYYY}_{MM}_{DD}_*.csv -> (ed_code, 'YYYY-MM-DD'),
-            # matching normalize.lineage_from_filename / RunLedger.record
-            toks = os.path.basename(p).split("_")
-            pcd = "-".join(toks[1:4]) if len(toks) >= 4 else ""
-            return (toks[0], pcd)
-
-        paths = [p for p in paths if _file_key(p) not in done]
-        if not paths:
-            return None
+        paths = [p for p in paths if key_from_filename(p) not in done]
+    if not paths:
+        return None
     df = read_edw_csv(spark, paths, data_type)
-    # checksum over the full data payload (change detection); merge keyed
-    # on the row identity (schemas.MERGE_KEYS — see note there)
-    payload = sorted(c for c in df.columns if c != "filename")
-    stamped = scd2_stamp(df, payload)
-    if os.path.exists(out_path):
-        old = spark.read.parquet(out_path)
-        stamped = scd2_ops.scd2_merge(old, stamped.select(*old.columns),
-                                      schemas.MERGE_KEYS[data_type])
-    write_partitioned(stamped, out_path)
-    if ledger is not None and ingestion_date:
-        for r in (
-            df.select("ed_code", "pcd").distinct().collect()
-        ):  # few deals; driver-side ledger append is the contract (K4)
-            ledger.record(data_type, ingestion_date, r["ed_code"], r["pcd"])
+    stamped = _stamp_merge_write(
+        spark, df, sorted(c for c in df.columns if c != "filename"), out_path, data_type
+    )
+    if tracked:
+        ledger.record(data_type, ingestion_date, sorted({key_from_filename(p) for p in paths}))
     return stamped
 
 
@@ -90,15 +101,8 @@ def bronze_deal_details(
 ) -> DataFrame:
     """Bronze load for deal_details XML: parse -> stamp -> merge -> write
     (the path where the reference's perform_scd2 was dead, §2.9)."""
-    df = read_deal_details(spark, xml_paths)
-    df = df.withColumn("pcd", F.col("PoolCutOffDate"))
-    stamped = scd2_stamp(df, sorted(c for c in df.columns))
-    if os.path.exists(out_path):
-        old = spark.read.parquet(out_path)
-        stamped = scd2_ops.scd2_merge(old, stamped.select(*old.columns),
-                                      schemas.MERGE_KEYS["deal_details"])
-    write_partitioned(stamped, out_path)
-    return stamped
+    df = read_deal_details(spark, xml_paths).withColumn("pcd", F.col("PoolCutOffDate"))
+    return _stamp_merge_write(spark, df, sorted(df.columns), out_path, "deal_details")
 
 
 def _silver(
@@ -112,33 +116,25 @@ def _silver(
     ranges: dict[str, tuple[str, int, int]],
     part: str | None = None,
 ) -> dict[str, DataFrame]:
-    bronze = spark.read.parquet(bronze_path)
-    if part is not None:
-        bronze = bronze.where(F.col("part") == part)  # partition-pruned scan (S6/P1)
-    snap = scd2_ops.current_snapshot(bronze)
-
-    # single-pass QC accounting (Observation API): row counts ride the
-    # quarantine write's own scan — at 100 TB a separate .count() per
-    # metric would re-read the whole snapshot once per number. The `bad`
-    # branch filters `snap`, so its write evaluates every snapshot row
-    # and materializes BOTH observations in that one action.
-    obs_all, obs_bad = Observation("qc_rows"), Observation("qc_bad")
-    snap = snap.observe(obs_all, F.count(F.lit(1)).alias("n_rows"))
-    good, bad = profile_data(snap, rules, strict_columns=False,
-                             lineage_cols=schemas.LINEAGE_COLS)
-    bad = bad.observe(obs_bad, F.count(F.lit(1)).alias("n_bad"))
-    good = good.persist(StorageLevel.MEMORY_AND_DISK)  # shared across topic fan-out
+    flagged = profile_data(_current(spark, bronze_path, part), rules, strict_columns=False,
+                           lineage_cols=schemas.LINEAGE_COLS)
+    # one validation pass feeds the counters, the quarantine and every topic
+    flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        write_quarantine(bad, os.path.join(out_dir, "dirty_dumps", data_type))
-        n_rows = obs_all.get["n_rows"]
-        n_bad = obs_bad.get["n_bad"]
+        # the QC counters: one aggregate over every row, which also fills
+        # the cache the writes below read
+        n_rows, n_bad = flagged.agg(F.count(F.lit(1)), F.count_if(~F.col("flag"))).first()
+        n_good = n_rows - n_bad
         spark.createDataFrame(
-            [(data_type, n_rows, n_bad, n_rows - n_bad)],
+            [(data_type, n_rows, n_bad, n_good)],
             "data_type string, n_rows long, n_bad long, n_good long",
         ).write.mode("overwrite").parquet(
             os.path.join(out_dir, "qc_metrics", data_type)
         )
-        if good.isEmpty():
+        good, bad = split_flagged(flagged)
+        if n_bad:
+            write_quarantine(bad, os.path.join(out_dir, "dirty_dumps", data_type))
+        if not n_good:
             return {}
         typed = cast_to_datatype(good, cast_map)
         topics = {
@@ -151,7 +147,7 @@ def _silver(
             write_partitioned(tdf, os.path.join(out_dir, data_type, name))
         return out
     finally:
-        good.unpersist()
+        flagged.unpersist()
 
 
 def silver_assets(spark, bronze_path, out_dir, part=None):
@@ -173,11 +169,7 @@ def silver_bond_info(spark, bronze_path, out_dir, part=None):
 def silver_deal_details(spark, bronze_path, out_dir, part=None):
     """Deal-details silver: cast + dedup (no topic split — one narrow
     table, generate_deal_details_silver.py:96-113)."""
-    bronze = spark.read.parquet(bronze_path)
-    if part is not None:
-        bronze = bronze.where(F.col("part") == part)
-    snap = scd2_ops.current_snapshot(bronze)
-    typed = cast_to_datatype(snap, schemas.DEAL_DETAILS_COLUMNS)
+    typed = cast_to_datatype(_current(spark, bronze_path, part), schemas.DEAL_DETAILS_COLUMNS)
     out = typed.dropDuplicates(["ed_code", "PoolCutOffDate"])
     write_partitioned(out, os.path.join(out_dir, "deal_details"))
     return out

@@ -119,69 +119,8 @@ def _last_passed_round() -> dict[str, int]:
     return last
 
 
-#: queries whose ORACLE changed (or appeared) after their last driver
-#: grading, mapped to the round the oracle changed in: scheduled ahead of
-#: even never-graded queries so the stronger check lands in the next
-#: driver window. Entries RETIRE THEMSELVES — once a CORRECTNESS artifact
-#: at or after the noted round records a hash_match pass, the entry stops
-#: forcing (no manual cleanup next round).
-_FORCE_REGRADE: dict[str, int] = {
-    # oracle-paired in r6 (md5 hash family, commit 23b3d93) but last
-    # driver grade was the r5 rows-only check (VERDICT r6 #3)
-    "dedup_minhash_banded": 6,
-    # semantics changed r7: registered default is now the max_df-capped
-    # pruned form with the cap replayed in the oracle (VERDICT r6 #1)
-    "text_tfidf_cosine_pairs": 7,
-    # oracle-paired r7 via the unrolled delimited-string merge chain
-    # (VERDICT r6 #7); previous grades were rows-only
-    "text_bpe_train_merges": 7,
-    "text_bpe_encode": 7,
-    # oracle-paired r7: deterministic Lloyd codebooks made the whole
-    # PQ / IVF-PQ index replayable in DuckDB (queries/_pq_oracle.py);
-    # previous grades were rows-only
-    "similarity_pq_topk": 7,
-    "similarity_ivf_pq_topk": 7,
-    # probe-cell ranking changed r8 (6dp-rounded distance before argmin,
-    # ADVICE r7 #1) — regrade with the aligned contract even though the
-    # r7 grade hash-matched the pre-fix plan
-    "similarity_ivf_topk": 8,
-    # semantics changed r8: registered default now sub-splits clusters
-    # at SEMDEDUP_MAX_CLUSTER via the md5 hash-bucket idiom, replayed
-    # in the oracle (VERDICT r7 #1 — the last scale-weak plan)
-    "dedup_semantic_prune": 8,
-    # oracle-paired r9: registered default switched from pyspark.ml
-    # BRP-LSH (seeded JVM RNG, rows-only since r3) to the deterministic
-    # md5-sign random-hyperplane family replayed in DuckDB (VERDICT r8 #1)
-    "similarity_lsh_buckets": 9,
-}
-
-
-def _last_hash_round() -> dict[str, int]:
-    """Round of each query's newest driver HASH-MATCH pass (the strong
-    check only — rows-only passes don't count here)."""
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                report = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, row in report.items():
-            if isinstance(row, dict) and row.get("hash_match") is True:
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
 def _schedule() -> None:
     last = _last_passed_round()
-    hashed = _last_hash_round()
-    force = {
-        n for n, since in _FORCE_REGRADE.items() if hashed.get(n, 0) < since
-    }
     # permanently rows-only queries (no oracle by construction — seeded
     # JVM sketches / xxhash64) sort BEHIND every oracle-paired query:
     # their driver grade can only ever be the weak rows-only check, which
@@ -190,14 +129,7 @@ def _schedule() -> None:
     # all-query contract test. Keeping them out of the 50-slot graded
     # window costs no coverage and makes CORRECTNESS artifacts all-green
     # by construction.
-    ordered = sorted(
-        QUERIES,
-        key=lambda n: (
-            n not in ORACLES,
-            -1 if n in force else last.get(n, 0),
-            n,
-        ),
-    )
+    ordered = sorted(QUERIES, key=lambda n: (n not in ORACLES, last.get(n, 0), n))
     snapshot = dict(QUERIES)
     QUERIES.clear()
     QUERIES.update({n: snapshot[n] for n in ordered})

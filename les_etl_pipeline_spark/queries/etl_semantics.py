@@ -284,7 +284,7 @@ def etl_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     report a data-quality dashboard reads off the dirty_dumps table. The
     JSON parse + explode is a projection; the count groupBy's domain is
     the rule set, not the data."""
-    from ..operators.validation import profile_data
+    from ..operators.validation import profile_data, split_flagged
 
     o = table(spark, sf_dir, "orders").where(F.col("o_orderkey") <= 3000)
     dirty = o.select(
@@ -305,7 +305,7 @@ def etl_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "odate": {"type": "datetime", "max": "2100-12-31"},
         "req": {"nullable": False},
     }
-    _good, bad = profile_data(dirty, rules, strict_columns=True)
+    _good, bad = split_flagged(profile_data(dirty, rules, strict_columns=True))
     failed = bad.select(
         F.explode(
             F.from_json("qc_errors", "struct<failed:array<string>>")["failed"]

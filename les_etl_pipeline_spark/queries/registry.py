@@ -20,7 +20,11 @@ ORACLES: dict[str, str] = {}
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a named query; ``oracle`` is DuckDB SQL over the same
-    tables, or None for non-SQL-expressible ops (rows-only check)."""
+    tables, or None for non-SQL-expressible ops (rows-only check).
+    Names are unique: registering one twice raises instead of silently
+    shadowing the first definition."""
+    if name in QUERIES:
+        raise ValueError(f"query {name!r} is already registered")
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn

@@ -1,5 +1,5 @@
-"""Relational coverage batch 3: more TPC-H-shaped analytics (q10 returned
-items, q14 promo share, q18 large orders), CTEs, map functions, and the
+"""Relational coverage batch 3: more TPC-H-shaped analytics (q14 promo
+share, q18 large orders), CTEs, map functions, and the
 native form of a grouped z-score (whose applyInPandas twin lives in
 operators/grouped.py with an equivalence test).
 """
@@ -12,48 +12,6 @@ from pyspark.sql import functions as F
 from ..catalog import table, register_views
 from ..functions.rounding import hround
 from .registry import register
-
-
-@register(
-    "q10_returned_items",
-    oracle="""
-    SELECT c_custkey, c_name,
-           (floor((sum(l_extendedprice * (1 - l_discount))) * 100.0 + 0.5) / 100.0) AS revenue,
-           n_name
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    JOIN nation   ON c_nationkey = n_nationkey
-    WHERE l_returnflag = 'R'
-      AND o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o_orderdate < TIMESTAMP '1996-07-01'
-    GROUP BY c_custkey, c_name, n_name
-    ORDER BY revenue DESC, c_custkey
-    LIMIT 20
-    """,
-)
-def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = table(spark, sf_dir, "customer")
-    orders = table(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit("1996-07-01").cast("timestamp_ntz"))
-    )
-    li = table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    nation = table(spark, sf_dir, "nation")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .groupBy("c_custkey", "c_name", "n_name")
-        .agg(
-            hround(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias(
-                "revenue"
-            )
-        )
-        .select("c_custkey", "c_name", "revenue", "n_name")
-        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
-        .limit(20)
-    )
 
 
 @register(

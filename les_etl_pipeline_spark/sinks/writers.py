@@ -1,112 +1,80 @@
-"""Partitioned table writers + run ledger.
+"""Partitioned parquet writers + run ledger.
 
-K1-K4 (SURVEY.md §2.2) re-expressed: part-partitioned writes with dynamic
-partition overwrite (only written partitions replaced — the session sets
-partitionOverwriteMode=DYNAMIC as the reference did, les_main.py:42).
-Format is parquet by default, delta when the extension is installed
-(import-gated — not present in this container).
+K1-K4 (SURVEY.md §2.2) re-expressed: part-partitioned parquet writes with
+dynamic partition overwrite (only written partitions replaced — the
+session sets partitionOverwriteMode=DYNAMIC as the reference did,
+les_main.py:42). Every pipeline reader is ``spark.read.parquet``, so the
+output format is parquet only.
 
 The reference wrapped every write in a retry-5-swallow-errors loop
 (generate_bronze_tables.py:76-90 — SURVEY.md §4.2 flags it): here writes
-fail loudly and rely on Spark task retries.
+fail loudly and rely on Spark task retries. No writer runs a probe action
+of its own: the silver stage decides whether to write the quarantine from
+the counts of its one QC aggregate.
 
 The run ledger (S3/K4/O4: clean_dump markers driving idempotence) becomes
-a small parquet table keyed by (data_type, ingestion_date, ed_code).
+a small parquet table keyed by (data_type, ingestion_date, ed_code), one
+append per processed batch.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: caps the other small-file extreme: no output file exceeds this many rows
+MAX_RECORDS_PER_FILE = 5_000_000
 
-def have_delta() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+_LEDGER_SCHEMA = "data_type string, ingestion_date string, ed_code string, pcd string"
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    fmt: str | None = None,
-    partition_by: str = "part",
-    max_records_per_file: int | None = 5_000_000,
-    files_per_partition: int | None = None,
-) -> None:
-    """K1/K2: partitioned overwrite write (dynamic: replaces only the
+def write_partitioned(df: DataFrame, path: str) -> None:
+    """K1/K2: part-partitioned overwrite write (dynamic: replaces only the
     partitions present in df).
 
     Small-file control (the silent killer of 100 TB tables): rows are
     pre-shuffled onto their partition key so each Hive partition is
     written by few tasks (1 file per partition per task instead of
-    tasks x partitions shards), and maxRecordsPerFile caps the other
-    extreme. files_per_partition repartitions (partition_by, bucket)
-    for huge partitions that need parallel writers."""
-    fmt = fmt or ("delta" if have_delta() else "parquet")
-    if files_per_partition and files_per_partition > 1:
-        # explicit numPartitions: AQE's partition coalescing would merge
-        # the hash-bucket fan-out right back into one task otherwise
-        n_parts = df.select(partition_by).distinct().count()
-        df = df.repartition(
-            max(1, n_parts * files_per_partition),
-            F.col(partition_by),
-            F.pmod(F.xxhash64(*df.columns), F.lit(files_per_partition)),
-        )
-    else:
-        df = df.repartition(F.col(partition_by))
-    w = df.write.format(fmt).mode("overwrite").partitionBy(partition_by)
-    if max_records_per_file:
-        w = w.option("maxRecordsPerFile", max_records_per_file)
-    w.save(path)
+    tasks x partitions shards), and MAX_RECORDS_PER_FILE caps the other
+    extreme."""
+    (
+        df.repartition(F.col("part"))
+        .write.mode("overwrite")
+        .partitionBy("part")
+        .option("maxRecordsPerFile", MAX_RECORDS_PER_FILE)
+        .parquet(path)
+    )
 
 
 def write_quarantine(bad_df: DataFrame, path: str) -> None:
-    """K3: failed-validation rows with qc_errors, partitioned by part."""
-    if bad_df.isEmpty():
-        return
+    """K3: failed-validation rows with qc_errors, partitioned by part. The
+    caller writes it only when it counted bad rows, so an all-clean run
+    leaves no dirty dump (the reference's empty-frame gate,
+    generate_asset_silver.py:85-87)."""
     write_partitioned(bad_df, path)
 
 
 class RunLedger:
-    """S3/K4/O4 idempotence ledger: has_run/record around whole-batch
+    """S3/K4/O4 idempotence ledger: entries/record around whole-batch
     processing, replacing the reference's clean_dump CSV blobs."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
-        return self.spark.read.parquet(self.path)
-
-    def has_run(self, data_type: str, ingestion_date: str, ed_code: str) -> bool:
-        df = self._read()
-        if df is None:
-            return False
-        return not df.where(
-            (F.col("data_type") == data_type)
-            & (F.col("ingestion_date") == ingestion_date)
-            & (F.col("ed_code") == ed_code)
-        ).isEmpty()
-
-    def record(self, data_type: str, ingestion_date: str, ed_code: str, pcd: str) -> None:
-        row = self.spark.createDataFrame(
-            [(data_type, ingestion_date, ed_code, pcd)],
-            "data_type string, ingestion_date string, ed_code string, pcd string",
-        )
-        row.write.mode("append").parquet(self.path)
+    def record(
+        self, data_type: str, ingestion_date: str, keys: Iterable[tuple[str, str]]
+    ) -> None:
+        """Append one row per (ed_code, pcd) of a processed batch, in one
+        write."""
+        rows = [(data_type, ingestion_date, ed_code, pcd) for ed_code, pcd in keys]
+        df = self.spark.createDataFrame(rows, _LEDGER_SCHEMA)
+        df.coalesce(1).write.mode("append").parquet(self.path)
 
     def entries(self, data_type: str) -> DataFrame:
-        df = self._read()
-        if df is None:
-            return self.spark.createDataFrame(
-                [], "data_type string, ingestion_date string, ed_code string, pcd string"
-            )
-        return df.where(F.col("data_type") == data_type)
+        if not os.path.exists(self.path):
+            return self.spark.createDataFrame([], _LEDGER_SCHEMA)
+        return self.spark.read.parquet(self.path).where(F.col("data_type") == data_type)

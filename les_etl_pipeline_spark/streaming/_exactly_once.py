@@ -17,6 +17,9 @@ the first batches of any NEW stream draining into an existing index
   so a replay after a crash anywhere between first write and ledger
   commit simply rewrites its own segments byte-for-byte: no duplicate
   rows, no lost rows. The ledger commit is the LAST step of a batch.
+  The ANN sink, where a drain and a maintenance fold can write the same
+  segment at once, uses ``publish_segment`` (hidden staging dir, then
+  one atomic rename) instead.
 - Readers list the table root with ``recursiveFileLookup`` so segment
   subdirectories and compacted top-level files coexist in one layout
   (partition-discovery conflicts — ADVICE r8 medium — cannot arise
@@ -38,6 +41,7 @@ import hashlib
 import os
 import re
 import shutil
+import uuid
 
 LEDGER_DIR = "_ledger"
 _SEG_RE = re.compile(r"^seg-([0-9a-f]{12})-b(\d+)$")
@@ -97,6 +101,28 @@ def is_complete(table_path: str) -> bool:
 def segment(table_path: str, key: str, batch_id: int) -> str:
     """The (checkpoint, batch)-scoped directory a batch writes into."""
     return os.path.join(table_path, f"seg-{key}-b{batch_id}")
+
+
+def publish_segment(df, dst: str) -> bool:
+    """Write ``df`` as the segment directory ``dst`` in one atomic step:
+    the rows go to a uniquely named hidden sibling (``.``-prefixed, so
+    every reader skips it), which is then renamed onto ``dst``. Two
+    writers of one segment — an ANN drain's CAS retry and a maintenance
+    fold — therefore never share a Hadoop committer's ``_temporary``
+    dir, whose cleanup deletes the other job's in-flight files. Segment
+    contents are deterministic per (generation, checkpoint, batch), so
+    when ``dst`` already holds a segment the later writer drops its
+    copy. Returns True iff this call published ``dst``."""
+    staging = os.path.join(
+        os.path.dirname(dst), f".{os.path.basename(dst)}.{uuid.uuid4().hex}"
+    )
+    df.write.parquet(staging)
+    try:
+        os.rename(staging, dst)  # fails if dst exists and is non-empty
+        return True
+    except OSError:
+        shutil.rmtree(staging, ignore_errors=True)
+        return False
 
 
 def clear_segments(table_paths: list[str], key: str, batch_id: int) -> None:

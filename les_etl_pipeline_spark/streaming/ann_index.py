@@ -332,10 +332,17 @@ def ann_index_sink(
             postings_path = os.path.join(root, "postings")
             # repair a legacy crashed in-place swap before touching postings
             xo.recover_swap(postings_path)
-            xo.clear_segments([postings_path], key, batch_id)
+            if not xo.committed(index_dir, key, batch_id):
+                # debris of a crashed attempt: no reader lists an
+                # uncommitted segment. A committed one (this txn's earlier
+                # attempt, or a fold's copy) is complete and may be under
+                # a concurrent compaction's read, so it stays.
+                xo.clear_segments([postings_path], key, batch_id)
             cents = _load_centroids(spark, centroids_path)
-            _segment_rows(e, cents, batch_id).write.mode("overwrite").parquet(
-                xo.segment(postings_path, key, batch_id)
+            # atomic: a maintenance fold may be copying this same segment
+            # into this generation right now (see _fold_missed_commits)
+            xo.publish_segment(
+                _segment_rows(e, cents, batch_id), xo.segment(postings_path, key, batch_id)
             )
 
         # the ledger HWM advances INSIDE the txn, after the segment write
@@ -497,8 +504,9 @@ def _fold_missed_commits(
     any segment committed past its read snapshot from the root it read
     into the new generation (segment dirs are per-(checkpoint, batch)
     and content-deterministic, so the fold racing the drain's own
-    rewrite of the same segment produces identical rows; existing
-    destinations are skipped). Vectors are RE-ASSIGNED against the new
+    rewrite of the same segment produces identical rows; both publish
+    through ``xo.publish_segment``, so whichever lands first stays and
+    existing destinations are skipped). Vectors are RE-ASSIGNED against the new
     generation's centroids on the way over — after a retrain the old
     cell ids are stale and a raw copy would bucket the rows where no
     probe looks; for a compaction (centroids copied verbatim) the
@@ -525,15 +533,14 @@ def _fold_missed_commits(
             if cents is None:
                 cents = _load_centroids(spark, os.path.join(new_root, "centroids"))
             rows = spark.read.schema(POSTINGS_SCHEMA).parquet(src)
-            (
+            if xo.publish_segment(
                 _assign(rows.select("vec_id", "v"), cents)
                 .select("vec_id", F.col("cluster").cast("int").alias("cell"), "v")
                 .join(rows.select("vec_id", "nrm", "batch"), "vec_id")
-                .select("vec_id", "cell", "v", "nrm", "batch")
-                .write.mode("overwrite")
-                .parquet(dst)
-            )
-            folded.append(os.path.basename(dst))
+                .select("vec_id", "cell", "v", "nrm", "batch"),
+                dst,
+            ):
+                folded.append(os.path.basename(dst))
     return folded
 
 

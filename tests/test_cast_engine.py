@@ -21,12 +21,6 @@ def test_bool_y_n_null(spark):
     assert _one(out, "b") == [True, False, False, False, False]
 
 
-def test_bool_null_preserving_mode(spark):
-    df = spark.createDataFrame([("y",), ("n",), (None,)], ["b"])
-    out = cast_to_datatype(df, {"b": T.BooleanType()}, legacy_bool_null_false=False)
-    assert _one(out, "b") == [True, False, None]
-
-
 def test_date_garbage_null(spark):
     df = spark.createDataFrame([("2023-06-30",), ("nope",), (None,)], ["d"])
     out = cast_to_datatype(df, {"d": T.DateType()})

@@ -15,7 +15,7 @@ from pyspark.sql import types as T
 
 from les_etl_pipeline_spark import schemas as S
 from les_etl_pipeline_spark.operators.cast_engine import cast_to_datatype
-from les_etl_pipeline_spark.operators.validation import profile_data
+from les_etl_pipeline_spark.operators.validation import profile_data, split_flagged
 
 
 def _valid_value(col: str, rules: dict) -> "str | None":
@@ -101,7 +101,7 @@ def test_full_width_valid_row_passes(spark, rules_name):
     common lineage rules enforced too."""
     rules = dict(getattr(S, rules_name)) | S.COMMON_RULES
     df = _df_all_strings(spark, _full_width_row(getattr(S, rules_name)))
-    good, bad = profile_data(df, rules, strict_columns=True)
+    good, bad = split_flagged(profile_data(df, rules, strict_columns=True))
     assert good.count() == 1
     assert bad.count() == 0
 
@@ -123,7 +123,7 @@ def test_full_width_rule_failures_fire(spark):
     df = spark.createDataFrame(
         [tuple(r[c] for c in cols) for r, _ in broken], schema
     )
-    good, bad = profile_data(df, rules, strict_columns=True)
+    good, bad = split_flagged(profile_data(df, rules, strict_columns=True))
     assert good.count() == 0
     errs = [r["qc_errors"] for r in bad.collect()]
     assert len(errs) == len(broken)
@@ -139,6 +139,6 @@ def test_full_width_unknown_column_rejected(spark):
     row["AL999"] = "x"
     df = _df_all_strings(spark, row)
     rules = dict(S.ASSET_RULES) | S.COMMON_RULES
-    good, bad = profile_data(df, rules, strict_columns=True)
+    good, bad = split_flagged(profile_data(df, rules, strict_columns=True))
     assert good.count() == 0
     assert "AL999.unknown_column" in bad.collect()[0]["qc_errors"]

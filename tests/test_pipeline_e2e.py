@@ -73,9 +73,11 @@ def test_bronze_to_silver_e2e(spark, raw_dir, tmp_path):
     assert b.where(F.col("iscurrent") == 1).count() == 5
     parts = {r["part"] for r in b.select("part").distinct().collect()}
     assert parts == {"LESIT01_20230630", "LESIT02_20230731"}
-    # ledger idempotence marker recorded per deal
-    assert ledger.has_run("assets", "2023-08-01", "LESIT01")
-    assert not ledger.has_run("assets", "2023-08-02", "LESIT01")
+    # ledger idempotence marker recorded per deal, in one append
+    marks = {(r["ingestion_date"], r["ed_code"], r["pcd"])
+             for r in ledger.entries("assets").collect()}
+    assert marks == {("2023-08-01", "LESIT01", "2023-06-30"),
+                     ("2023-08-01", "LESIT02", "2023-07-31")}
 
     topics = pipelines.silver_assets(spark, bronze_path, out_dir)
     # quarantine captured the AL56-required violation (1 bad row per file-1)
@@ -88,8 +90,7 @@ def test_bronze_to_silver_e2e(spark, raw_dir, tmp_path):
     assert lease.schema["AL1"].dataType.typeName() == "date"
     al30 = {r["AL30"] for r in lease.select("AL30").collect()}
     assert al30 == {7.25, 1.5}
-    # zero-extra-pass QC accounting (Observation API): the metrics row
-    # written from the quarantine action's own scan matches reality
+    # QC accounting from the one aggregate over the validated frame
     qc = spark.read.parquet(os.path.join(out_dir, "qc_metrics", "assets")).collect()[0]
     n_current = b.where(F.col("iscurrent") == 1).count()
     assert (qc["n_rows"], qc["n_bad"]) == (n_current, 1)
@@ -277,18 +278,32 @@ def test_distributed_xml_parity(spark, tmp_path):
     assert not {"Country", "DealVisibleToOrg", "MetricData"} & set(dist_df.columns)
 
 
-def test_observed_qc_metrics_ride_the_write(spark, tmp_path):
-    """observe()-based QC: row count and per-column null counts are
-    computed DURING the write action — no second scan — and match the
-    ground truth."""
-    from pyspark.sql import functions as F
+def test_silver_qc_counts_exact_across_partitions(spark, tmp_path):
+    """The QC counters count every row of a multi-partition bronze, with
+    bad rows in several partitions: no probe action may fill them with
+    the partial counts of an early exit."""
+    raw = tmp_path / "rawmulti"
+    raw.mkdir()
+    n_deals, per_deal, bad_at = 5, 40, (3, 17, 31)
 
-    from les_etl_pipeline_spark.operators.qc import observed, standard_qc_metrics
+    def row(d, j):  # DEFAULT_ASSET_ROWS[2] lacks the required AL56
+        base = DEFAULT_ASSET_ROWS[2 if j in bad_at else 0]
+        return [*base[:3], f"LS-{d}-{j}", *base[4:]]  # unique AL5
 
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "c"), (4, None), (5, "e")], "id long, v string"
-    )
-    inst, obs = observed(df, standard_qc_metrics(df, null_cols=["v"]))
-    inst.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got == {"n_rows": 5, "n_null_v": 2}
+    for d in range(n_deals):
+        write_asset_csv(str(raw), f"LESIT{d:02d}", (2023, 6, 30),
+                        [row(d, j) for j in range(per_deal)])
+    bronze = str(tmp_path / "bronze")
+    out = str(tmp_path / "silver")
+    pipelines.bronze_csv(spark, str(raw), bronze, "assets")
+    prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "4k")
+    try:
+        assert spark.read.parquet(bronze).rdd.getNumPartitions() >= 4
+        pipelines.silver_assets(spark, bronze, out)
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
+    n_rows, n_bad = n_deals * per_deal, n_deals * len(bad_at)
+    qc = spark.read.parquet(os.path.join(out, "qc_metrics", "assets")).collect()[0]
+    assert (qc["n_rows"], qc["n_bad"], qc["n_good"]) == (n_rows, n_bad, n_rows - n_bad)
+    assert spark.read.parquet(os.path.join(out, "dirty_dumps", "assets")).count() == n_bad

@@ -346,18 +346,24 @@ JOB_BUDGETS = {
 
 def test_job_budgets(spark, sf_dir):
     """Build + one noop execution of each checkpoint-dependent heavy
-    stays within its pinned driver job count."""
-    tracker = spark.sparkContext.statusTracker()
-
-    def n_jobs() -> int:
-        return len(tracker.getJobIdsForGroup(None) or [])
-
+    stays within its pinned driver job count. Each measurement runs under
+    its own job group and counts that group's jobs: a before/after delta
+    over ungrouped jobs misses grouped ones and goes wrong once the status
+    store evicts old jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     offenders = {}
-    for name, budget in JOB_BUDGETS.items():
-        j0 = n_jobs()
-        df = QUERIES[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        used = n_jobs() - j0
-        if used > budget:
-            offenders[name] = f"{used} jobs > budget {budget}"
+    try:
+        for name, budget in JOB_BUDGETS.items():
+            group = f"job_budget.{name}"
+            sc.setJobGroup(group, name)
+            df = QUERIES[name](spark, sf_dir)
+            df.write.format("noop").mode("overwrite").save()
+            used = len(tracker.getJobIdsForGroup(group))
+            assert used > 0, f"{name}: no job counted under {group}"
+            if used > budget:
+                offenders[name] = f"{used} jobs > budget {budget}"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
     assert not offenders, f"driver job budgets exceeded: {offenders}"

@@ -9,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 
 from les_etl_pipeline_spark.functions.rounding import hround
 from les_etl_pipeline_spark.operators.normalize import clean_cell
-from les_etl_pipeline_spark.operators.validation import profile_data
+from les_etl_pipeline_spark.operators.validation import profile_data, split_flagged
 
 cells = st.one_of(
     st.none(),
@@ -50,7 +50,7 @@ def test_validation_is_partition(spark, rows):
         "d": {"type": "datetime", "nullable": False},
         "n": {"type": "number", "min": 0, "max": 100},
     }
-    good, bad = profile_data(df, rules)
+    good, bad = split_flagged(profile_data(df, rules))
     assert good.count() + bad.count() == df.count()
 
 

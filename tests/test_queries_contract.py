@@ -57,6 +57,18 @@ def test_registry_complete():
     assert set(ORACLES) <= set(QUERIES)
 
 
+def test_register_rejects_duplicate_names():
+    """A second registration under a taken name raises and leaves the
+    first definition in place (a silent overwrite shadows it)."""
+    from les_etl_pipeline_spark.queries.registry import register
+
+    name = next(iter(ORACLES))
+    before = (QUERIES[name], ORACLES[name])
+    with pytest.raises(ValueError, match="already registered"):
+        register(name, oracle="SELECT 1")(lambda spark, sf_dir: None)
+    assert (QUERIES[name], ORACLES[name]) == before
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(spark, duck, sf_dir, name):
     sdf = QUERIES[name](spark, sf_dir)
@@ -99,33 +111,19 @@ def test_scheduler_is_lru_and_rotation_bound_holds():
     entries per round). Pin the two properties the staleness floor
     depends on (VERDICT r8 #6):
 
-    1. LRU: the order is exactly (forced-regrade first, then ascending
-       last-passed round, ties alphabetical) — no query can jump the
-       queue ahead of a staler one.
+    1. LRU: the order is exactly (ascending last-passed round, ties
+       alphabetical) — no query can jump the queue ahead of a staler one.
     2. Rotation bound: with W=50 slots and N registered queries, the
        least-recently-passed queries fill positions 0..(count-1), so any
        query whose last pass is among the `k*W` oldest is graded within
        k rounds. Concretely for the current artifacts: every query's
        projected re-grade keeps max staleness <= ceil(N/W) windows.
     """
-    from les_etl_pipeline_spark.queries import (
-        _FORCE_REGRADE,
-        _last_hash_round,
-        _last_passed_round,
-    )
+    from les_etl_pipeline_spark.queries import _last_passed_round
 
     names = list(QUERIES)
     last = _last_passed_round()
-    hashed = _last_hash_round()
-    force = {n for n, since in _FORCE_REGRADE.items() if hashed.get(n, 0) < since}
-    expected = sorted(
-        names,
-        key=lambda n: (
-            n not in ORACLES,
-            -1 if n in force else last.get(n, 0),
-            n,
-        ),
-    )
+    expected = sorted(names, key=lambda n: (n not in ORACLES, last.get(n, 0), n))
     assert names == expected, "registration order is not least-recently-verified-first"
 
     w = 50
@@ -138,25 +136,21 @@ def test_scheduler_is_lru_and_rotation_bound_holds():
     assert len(names) - len(rows_only) >= w, (
         "registry shrank below the graded window; rows-only tail would be graded"
     )
-    # forced-regrade queries legitimately jump the queue (their oracle
-    # changed); the staleness ordering applies to everything else
-    # oracle-paired
-    unforced = [n for n in names if n not in force and n in ORACLES]
-    rounds = sorted({last.get(n, 0) for n in unforced})
+    paired = [n for n in names if n in ORACLES]
+    rounds = sorted({last.get(n, 0) for n in paired})
     # positions are monotone in last-pass round: every query passed in
     # round r sits before every query passed in any later round, so the
     # k oldest rounds' queries occupy a contiguous prefix — the driver
     # window drains staleness strictly oldest-first
     pos = {n: i for i, n in enumerate(names)}
     for older, newer in zip(rounds, rounds[1:]):
-        max_old = max(pos[n] for n in unforced if last.get(n, 0) == older)
-        min_new = min(pos[n] for n in unforced if last.get(n, 0) == newer)
+        max_old = max(pos[n] for n in paired if last.get(n, 0) == older)
+        min_new = min(pos[n] for n in paired if last.get(n, 0) == newer)
         assert max_old < min_new, (older, newer)
     # the concrete r9/r10 floor: everything last passed in the two oldest
-    # grade rounds (plus whatever jumps ahead of it) fits inside the next
-    # TWO windows
+    # grade rounds fits inside the next TWO windows
     if len(rounds) >= 2:
-        two_oldest = [n for n in unforced if last.get(n, 0) <= rounds[1]]
+        two_oldest = [n for n in paired if last.get(n, 0) <= rounds[1]]
         assert max(pos[n] for n in two_oldest) < 2 * w, (
             "two-window drain bound violated"
         )

@@ -83,6 +83,24 @@ def test_kmeans_lloyd_partition_and_monotonicity(spark, sf_dir):
     assert a2.select("cluster").distinct().count() <= 4
 
 
+def test_assign_rejects_non_finite_centroids(spark):
+    """A NaN or infinite centroid component fails with a clear ValueError
+    (it used to render as ``nanD``/``infD`` and fail the SQL parse; a NaN
+    distance would floor to 0 and win every argmin). Finite centroids
+    still assign."""
+    import pytest
+
+    e = spark.createDataFrame(
+        [(1, [0.0, 0.0]), (2, [1.0, 1.0])], "vec_id long, v array<double>"
+    )
+    for bad in (float("nan"), float("inf"), float("-inf")):
+        with pytest.raises(ValueError, match="centroid 1 has a non-finite"):
+            clustering._assign(e, {0: [0.5, 0.5], 1: [bad, 0.0]})
+    got = {r.vec_id: (r.cluster, r.d)
+           for r in clustering._assign(e, {0: [0.5, 0.5], 1: [3.0, 3.0]}).collect()}
+    assert got == {1: (0, 0.5), 2: (0, 0.5)}
+
+
 def test_ewma_degenerate_alphas(spark, monkeypatch):
     """alpha folding sanity on a hand-built series: the fold reproduces
     the recurrence exactly, and a constant series stays constant."""

@@ -994,23 +994,23 @@ def test_drain_racing_retrain_redoes_batch_into_new_generation(
     )
     n_b1 = b1.count()
 
-    real_clear = xo.clear_segments
+    real_publish = xo.publish_segment
     state = {"n": 0}
 
-    def clear_then_retrain(*a, **kw):
-        real_clear(*a, **kw)
+    def retrain_then_publish(*a, **kw):
         state["n"] += 1
         if state["n"] == 1:
             # retrain lands between the drain's read and its commit
             SA.retrain_index(spark, index_dir)
+        return real_publish(*a, **kw)
 
-    monkeypatch.setattr(xo, "clear_segments", clear_then_retrain)
+    monkeypatch.setattr(xo, "publish_segment", retrain_then_publish)
     s2 = str(tmp_path / "race2_s2")
     b2.coalesce(1).write.mode("append").parquet(s2)
     SA.ann_index_sink(
         SA.read_vector_stream(spark, s2), index_dir, str(tmp_path / "race2_c2")
     )
-    monkeypatch.setattr(xo, "clear_segments", real_clear)
+    monkeypatch.setattr(xo, "publish_segment", real_publish)
 
     assert state["n"] == 2  # the batch's work ran twice: lost CAS, redid
     root = SA._index_root(spark, index_dir)
@@ -1311,6 +1311,34 @@ def test_epoch_txn_chaos_concurrent_drains_delete_compact(
     }
     for r in rows:
         assert r.cell == exp_assign[r.vec_id]
+
+
+def test_publish_segment_second_writer_loses_cleanly(spark, tmp_path, monkeypatch):
+    """The drain/fold interleaving on one segment, forced: writer B
+    publishes the segment while writer A sits between its staging write
+    and its rename. A must lose without an error, leave no staging
+    debris, and the segment must hold exactly one copy of the rows —
+    two Spark writes straight into one segment dir shared a committer
+    ``_temporary`` dir and could fail each other's tasks."""
+    import os
+
+    from les_etl_pipeline_spark.streaming import _exactly_once as xo
+
+    table_path = str(tmp_path / "postings")
+    dst = xo.segment(table_path, "0123456789ab", 0)
+    rows = spark.range(6).withColumnRenamed("id", "vec_id")
+    real_rename = os.rename
+
+    def rename_after_rival(src, target):
+        monkeypatch.setattr(xo.os, "rename", real_rename)
+        assert xo.publish_segment(rows, dst)  # B lands first
+        real_rename(src, target)  # A's rename now finds dst taken
+
+    monkeypatch.setattr(xo.os, "rename", rename_after_rival)
+    assert not xo.publish_segment(rows, dst)
+    assert os.listdir(table_path) == [os.path.basename(dst)]
+    got = xo.read_table(spark, table_path, "vec_id bigint").collect()
+    assert sorted(r.vec_id for r in got) == list(range(6))
 
 
 def test_vacuum_index_state_keeps_live_generation(spark, sf_dir, tmp_path):

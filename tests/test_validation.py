@@ -12,6 +12,7 @@ from les_etl_pipeline_spark.operators.validation import (
     coerce_datetime,
     compile_rules,
     profile_data,
+    split_flagged,
 )
 
 RULES = {
@@ -41,7 +42,7 @@ def test_good_and_bad_split(spark):
             ("2023-06-30", "pool-1", None, None),      # nullables -> good
         ],
     )
-    good, bad = profile_data(df, RULES)
+    good, bad = split_flagged(profile_data(df, RULES))
     assert good.count() == 2
     assert bad.count() == 5
     # partition property: good ∪ bad = all, good ∩ bad = ∅
@@ -50,7 +51,7 @@ def test_good_and_bad_split(spark):
 
 def test_qc_errors_name_failed_rules(spark):
     df = _mkdf(spark, [(None, "pool-1", "9", "7.25")])
-    _, bad = profile_data(df, RULES)
+    _, bad = split_flagged(profile_data(df, RULES))
     row = bad.collect()[0]
     failed = json.loads(row["qc_errors"])["failed"]
     assert "AL1.required" in failed
@@ -61,12 +62,12 @@ def test_qc_errors_name_failed_rules(spark):
 def test_unknown_column_strict(spark):
     df = spark.createDataFrame([("2023-06-30", "p", "2", "1", "zzz")],
                                ["AL1", "AL2", "AL18", "AL30", "EXTRA"])
-    good, bad = profile_data(df, RULES, strict_columns=True)
+    good, bad = split_flagged(profile_data(df, RULES, strict_columns=True))
     assert good.count() == 0 and bad.count() == 1
-    good2, bad2 = profile_data(df, RULES, strict_columns=False)
+    good2, bad2 = split_flagged(profile_data(df, RULES, strict_columns=False))
     assert good2.count() == 1 and bad2.count() == 0
     # lineage columns are exempt from strictness
-    good3, _ = profile_data(df, RULES, strict_columns=True, lineage_cols=("EXTRA",))
+    good3, _ = split_flagged(profile_data(df, RULES, strict_columns=True, lineage_cols=("EXTRA",)))
     assert good3.count() == 1
 
 
@@ -92,7 +93,7 @@ def test_no_python_udf_in_plan(spark):
 def test_typed_columns_accepted(spark):
     """Rules also apply to already-typed columns (post-cast re-validation)."""
     df = spark.createDataFrame([(7.5,), (250.0,), (None,)], ["AL30"])
-    good, bad = profile_data(df, {"AL30": {"type": "number", "min": 0, "max": 100}})
+    good, bad = split_flagged(profile_data(df, {"AL30": {"type": "number", "min": 0, "max": 100}}))
     assert good.count() == 2  # 7.5 and NULL (nullable) pass
     assert bad.count() == 1
 
@@ -127,7 +128,7 @@ def test_cerberus_message_mode(spark):
     validator.errors straight from Cerberus)."""
     import json
 
-    from les_etl_pipeline_spark.operators.validation import profile_data
+    from les_etl_pipeline_spark.operators.validation import profile_data, split_flagged
 
     df = spark.createDataFrame(
         [("", "99", "x"), ("ok", "5", "1.5")], "a string, b string, c string"
@@ -138,7 +139,7 @@ def test_cerberus_message_mode(spark):
         "b": {"type": "number", "min": 0, "max": 10},
         "c": {"type": "number"},
     }
-    good, bad = profile_data(df, rules, cerberus_messages=True)
+    good, bad = split_flagged(profile_data(df, rules, cerberus_messages=True))
     assert good.count() == 1 and bad.count() == 1
     errs = json.loads(bad.collect()[0]["qc_errors"])
     assert errs["a"] == ["null value not allowed"]
