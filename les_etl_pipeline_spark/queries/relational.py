@@ -446,11 +446,11 @@ def agg_cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    table(spark, sf_dir, "orders").createOrReplaceTempView("agg_grouping_sets_orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, count(*) AS n_orders
-        FROM orders
+        FROM agg_grouping_sets_orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
     )

@@ -319,12 +319,12 @@ def json_variant_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ev.select("event_id", doc.alias("doc")).createOrReplaceTempView(
-        "variant_explode_events"
+        "json_variant_explode_events"
     )
     return spark.sql(
         """
         SELECT event_id, v.pos, v.key, to_json(v.value) AS val_json
-        FROM variant_explode_events, LATERAL variant_explode(doc) v
+        FROM json_variant_explode_events, LATERAL variant_explode(doc) v
         ORDER BY event_id, pos
         """
     )

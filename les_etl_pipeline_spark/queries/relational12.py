@@ -612,13 +612,13 @@ def agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").withColumn(
         "cohort", (F.col("o_custkey") % 5).cast("string")
     )
-    o.createOrReplaceTempView("listagg_orders")
+    o.createOrReplaceTempView("agg_listagg_ordered_orders")
     return spark.sql(
         """
         SELECT o_orderstatus,
                listagg(DISTINCT o_orderpriority, ',')
                  WITHIN GROUP (ORDER BY o_orderpriority) AS priorities,
                array_join(array_sort(collect_set(cohort)), '|') AS cohorts
-        FROM listagg_orders GROUP BY o_orderstatus ORDER BY o_orderstatus
+        FROM agg_listagg_ordered_orders GROUP BY o_orderstatus ORDER BY o_orderstatus
         """
     )

@@ -48,12 +48,12 @@ def recursive_cte_chain_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     population — the same bounded-frontier posture as connected
     components. Integer division is `//` (DuckDB) vs DIV (Spark SQL) —
     same floor-division semantics on positive keys."""
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
+    table(spark, sf_dir, "customer").createOrReplaceTempView("recursive_cte_chain_walk_customer")
     return spark.sql(
         """
         WITH RECURSIVE walk AS (
           SELECT c_custkey AS start_key, c_custkey AS cur, 0 AS depth
-          FROM customer_v WHERE c_custkey < 400
+          FROM recursive_cte_chain_walk_customer WHERE c_custkey < 400
           UNION ALL
           SELECT start_key, cur DIV 10 AS cur, depth + 1 AS depth
           FROM walk WHERE cur > 0
@@ -90,16 +90,16 @@ def lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical strategy. The money column goes through the portable
     floor-rounding formula (functions/rounding.py), never bare round().
     """
-    table(spark, sf_dir, "nation").createOrReplaceTempView("nation_v")
-    table(spark, sf_dir, "customer").createOrReplaceTempView("customer_v")
+    table(spark, sf_dir, "nation").createOrReplaceTempView("lateral_topk_per_nation_nation")
+    table(spark, sf_dir, "customer").createOrReplaceTempView("lateral_topk_per_nation_customer")
     return spark.sql(
         """
         SELECT n.n_name AS nation,
                l.c_custkey AS custkey,
                (floor(l.c_acctbal * 100.0D + 0.5D) / 100.0D) AS acctbal
-        FROM nation_v n,
+        FROM lateral_topk_per_nation_nation n,
         LATERAL (SELECT c_custkey, c_acctbal
-                 FROM customer_v c
+                 FROM lateral_topk_per_nation_customer c
                  WHERE c.c_nationkey = n.n_nationkey
                  ORDER BY c_acctbal DESC, c_custkey LIMIT 3) l
         ORDER BY nation, acctbal DESC, custkey
@@ -126,13 +126,13 @@ def agg_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     under test is dialect parity between the two engines' inference
     rules, which must pick identical key sets for the hashes to match.
     """
-    table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_v")
+    table(spark, sf_dir, "lineitem").createOrReplaceTempView("agg_group_by_all_lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                CAST(count(*) AS BIGINT) AS n,
                (floor(sum(l_quantity) * 100.0D + 0.5D) / 100.0D) AS sum_qty
-        FROM lineitem_v
+        FROM agg_group_by_all_lineitem
         GROUP BY ALL
         ORDER BY ALL
         """

@@ -54,13 +54,16 @@ def compact_parquet(
     file index. Reads the directory, rewrites it as ``target_files``
     files (range-partitioned and sorted on ``sort_col`` when given, so
     compaction doubles as a clustering pass; plain coalesce otherwise),
-    and swaps atomically-enough via a staging directory + rename.
-    Returns the resulting file count. On a table format (Delta/Iceberg)
+    and swaps it in with ``atomic.replace_dir`` (a crash between its
+    renames is repaired by the next call). Returns the resulting file
+    count. On a table format (Delta/Iceberg)
     this is OPTIMIZE/rewrite_data_files; this is the stock-writer form
     for plain parquet directories the reference's bronze layer uses."""
     import os
-    import shutil
 
+    from .atomic import replace_dir
+
+    path = path.rstrip("/")
     df = spark.read.parquet(path)
     if sort_col is not None:
         out = df.repartitionByRange(target_files, F.col(sort_col)).sortWithinPartitions(
@@ -68,10 +71,5 @@ def compact_parquet(
         )
     else:
         out = df.coalesce(target_files)
-    staging = path.rstrip("/") + "._compacting"
-    out.write.mode("overwrite").parquet(staging)
-    old = path.rstrip("/") + "._old"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
+    replace_dir(out, path)
     return len([f for f in os.listdir(path) if f.endswith(".parquet")])

@@ -93,6 +93,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .atomic import write_json
+
 CURRENT = "_CURRENT"
 COMMITTED = "_COMMITTED"
 MARKER_PREFIX = "commit-v="
@@ -440,10 +442,9 @@ class SnapshotStore:
         cur = self._pointer_version()
         if cur is not None and cur >= version:
             return
-        fd, tmp = tempfile.mkstemp(prefix="._current.", dir=self.root)
-        with os.fdopen(fd, "w") as f:
-            json.dump({"version": version, "published_at": time.time()}, f)
-        os.replace(tmp, self._pointer_path())
+        write_json(
+            self._pointer_path(), {"version": version, "published_at": time.time()}
+        )
 
     # -- write / audit / publish ----------------------------------------------
     @staticmethod
@@ -463,15 +464,10 @@ class SnapshotStore:
         # v=<n> dir rename can survive a power loss that drops an
         # unsynced _TX_META body, and _claim_meta would then read the
         # conditional partition claim as a legacy UNCONDITIONAL
-        # whole-table commit — fail-unsafe. mkstemp + fsync + atomic
-        # replace (the same pattern as the marker body) makes the meta
-        # either fully present or absent-with-the-dir-absent.
-        fd, tmp = tempfile.mkstemp(prefix="._txmeta.", dir=staging)
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(staging, TX_META))
+        # whole-table commit — fail-unsafe. atomic.write_json (mkstemp +
+        # fsync + replace) makes the meta either fully present or
+        # absent-with-the-dir-absent.
+        write_json(os.path.join(staging, TX_META), meta)
 
     def publish(
         self,
@@ -810,7 +806,7 @@ class SnapshotStore:
         pending = self._pending_staging_names()
         now = time.time()
         for name in os.listdir(self.root):
-            if name.startswith("._marker.") or name.startswith("._current."):
+            if name.startswith(("._marker.", f".{CURRENT}.")):
                 # tmp debris of a crashed atomic claim / pointer write
                 path = os.path.join(self.root, name)
                 try:

@@ -22,6 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sinks.atomic import write_json
+
 
 def read_high_water_mark(state_path: str) -> str | None:
     """The stored mark, or None before the first run."""
@@ -55,8 +57,5 @@ def commit_high_water_mark(delta: DataFrame, ts_col: str, state_path: str) -> st
     if row["m"] is None:
         return read_high_water_mark(state_path)
     mark = row["m"].strftime("%Y-%m-%d %H:%M:%S.%f")
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"high_water_mark": mark}, f)
-    os.replace(tmp, state_path)
+    write_json(state_path, {"high_water_mark": mark})
     return mark

@@ -46,6 +46,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..sinks.atomic import write_json
+
 _VOCAB = (
     "the fast key order sort table scan merge part window small hash join "
     "batch stream spark data query plan shuffle broadcast filter agg dup "
@@ -177,14 +179,13 @@ class _JsonlShardWriter(DataSourceWriter):
         """Driver-side publish: the manifest lists exactly the shards of
         successful tasks; readers that honor the manifest never see
         abandoned duplicates."""
-        manifest = {
-            "shards": sorted(m.shard for m in messages),
-            "n_rows": sum(m.n_rows for m in messages),
-        }
-        tmp = os.path.join(self.path, "._MANIFEST.tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST"))
+        write_json(
+            os.path.join(self.path, "_MANIFEST"),
+            {
+                "shards": sorted(m.shard for m in messages),
+                "n_rows": sum(m.n_rows for m in messages),
+            },
+        )
 
     def abort(self, messages: list[_ShardCommit]) -> None:
         for m in messages:

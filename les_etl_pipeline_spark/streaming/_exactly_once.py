@@ -1,5 +1,5 @@
 """Exactly-once machinery shared by the streaming index sinks
-(``dedup_index`` and ``ann_index``).
+(``dedup_index``, ``gapfill`` and ``ann_index``).
 
 Why not the data's ``batch`` column? foreachBatch batch ids are
 PER-CHECKPOINT (they restart at 0 for every new stream/checkpoint), so a
@@ -10,24 +10,23 @@ the first batches of any NEW stream draining into an existing index
 - ``<index_dir>/_ledger/<ckpt_key>`` holds that checkpoint's committed
   high-water mark (batch ids within one checkpoint are monotonic, and a
   restart replays only the batch after the HWM, so one integer is a
-  complete ledger per stream). Commit is write-to-temp + ``os.replace``
-  — atomic, readers see old or new, never partial.
+  complete ledger per stream). Commit is ``sinks/atomic.write_json`` —
+  readers see old or new, never partial.
 - Each batch's table writes go to a per-(checkpoint, batch) SEGMENT
-  directory (``<table>/seg-<ckpt_key>-b<n>``) with mode("overwrite"),
-  so a replay after a crash anywhere between first write and ledger
-  commit simply rewrites its own segments byte-for-byte: no duplicate
-  rows, no lost rows. The ledger commit is the LAST step of a batch.
-  The ANN sink, where a drain and a maintenance fold can write the same
-  segment at once, uses ``publish_segment`` (hidden staging dir, then
-  one atomic rename) instead.
+  directory (``<table>/seg-<ckpt_key>-b<n>``), published whole by
+  ``sinks/atomic.publish_dir`` (hidden staging dir, then one rename). A
+  replay first clears its own uncommitted segments, so it republishes
+  byte-identical rows: no duplicate rows, no lost rows. The ledger
+  commit is the LAST step of a batch.
 - Readers list the table root with ``recursiveFileLookup`` so segment
   subdirectories and compacted top-level files coexist in one layout
   (partition-discovery conflicts — ADVICE r8 medium — cannot arise
   because no directory level is a partition column).
 
 Crash matrix (single active writer per index, the documented contract):
-  crash mid-segment-write  -> replay overwrites the partial segment
-  crash before commit      -> replay rewrites identical segments, commits
+  crash mid-segment-write  -> only a hidden staging dir exists; replay
+                              republishes the segment
+  crash before commit      -> replay clears and republishes, commits
   replay after commit      -> HWM check skips, no-op
 An ABANDONED checkpoint (crashed mid-batch, never restarted) can leave
 an uncommitted segment behind; it is invisible to the ledger and is
@@ -41,7 +40,8 @@ import hashlib
 import os
 import re
 import shutil
-import uuid
+
+from ..sinks import atomic
 
 LEDGER_DIR = "_ledger"
 _SEG_RE = re.compile(r"^seg-([0-9a-f]{12})-b(\d+)$")
@@ -71,58 +71,13 @@ def committed(index_dir: str, key: str, batch_id: int) -> bool:
 
 def commit(index_dir: str, key: str, batch_id: int) -> None:
     """Advance the stream's high-water mark to ``batch_id`` (atomic)."""
-    ledger = os.path.join(index_dir, LEDGER_DIR)
-    os.makedirs(ledger, exist_ok=True)
-    tmp = os.path.join(ledger, f".{key}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(batch_id))
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _hwm_path(index_dir, key))
-
-
-_COMPLETE = "_COMPLETE"
-
-
-def mark_complete(table_path: str) -> None:
-    """Drop a write-complete marker INSIDE a just-(over)written table dir
-    (the session disables Spark's own _SUCCESS markers). mode("overwrite")
-    wipes the dir first, so a crash mid-rewrite leaves no stale marker;
-    underscore-prefixed files are invisible to Spark reads."""
-    with open(os.path.join(table_path, _COMPLETE), "w") as f:
-        f.flush()
-        os.fsync(f.fileno())
-
-
-def is_complete(table_path: str) -> bool:
-    return os.path.exists(os.path.join(table_path, _COMPLETE))
+    os.makedirs(os.path.join(index_dir, LEDGER_DIR), exist_ok=True)
+    atomic.write_json(_hwm_path(index_dir, key), batch_id)
 
 
 def segment(table_path: str, key: str, batch_id: int) -> str:
     """The (checkpoint, batch)-scoped directory a batch writes into."""
     return os.path.join(table_path, f"seg-{key}-b{batch_id}")
-
-
-def publish_segment(df, dst: str) -> bool:
-    """Write ``df`` as the segment directory ``dst`` in one atomic step:
-    the rows go to a uniquely named hidden sibling (``.``-prefixed, so
-    every reader skips it), which is then renamed onto ``dst``. Two
-    writers of one segment — an ANN drain's CAS retry and a maintenance
-    fold — therefore never share a Hadoop committer's ``_temporary``
-    dir, whose cleanup deletes the other job's in-flight files. Segment
-    contents are deterministic per (generation, checkpoint, batch), so
-    when ``dst`` already holds a segment the later writer drops its
-    copy. Returns True iff this call published ``dst``."""
-    staging = os.path.join(
-        os.path.dirname(dst), f".{os.path.basename(dst)}.{uuid.uuid4().hex}"
-    )
-    df.write.parquet(staging)
-    try:
-        os.rename(staging, dst)  # fails if dst exists and is non-empty
-        return True
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        return False
 
 
 def clear_segments(table_paths: list[str], key: str, batch_id: int) -> None:
@@ -198,32 +153,6 @@ def _hwms(index_dir: str) -> dict[str, int]:
         except (OSError, ValueError):
             continue
     return out
-
-
-def recover_swap(table_path: str) -> str | None:
-    """Repair a compaction swap interrupted mid-flight. The swap is
-    staging-write -> rename(table, table.old) -> rename(staging, table)
-    -> rmtree(table.old); a crash can leave (a) the table dir missing
-    with a COMPLETE staging beside it (the first rename only ever runs
-    after staging is fully written and counted — adopt staging), (b) the
-    table missing with only the backup left (restore the backup), or
-    (c) the table intact with stale staging/backup debris (drop both —
-    a staging next to an intact table is either unswapped or partial,
-    and the next compaction rebuilds it anyway). Run at the top of every
-    compaction, under the same never-concurrent-with-a-drain contract.
-    Returns the action taken, or None."""
-    staging, backup = table_path + ".staging", table_path + ".old"
-    action = None
-    if not os.path.exists(table_path):
-        if os.path.exists(staging):
-            os.rename(staging, table_path)
-            action = "adopted_staging"
-        elif os.path.exists(backup):
-            os.rename(backup, table_path)
-            action = "restored_backup"
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-    return action
 
 
 def drop_uncommitted_segments(index_dir: str, table_paths: list[str]) -> int:

@@ -28,9 +28,12 @@ APPENDS (vec_id, cell, vector, norm, batch) rows. State on storage:
 
 Exactly-once is provided by ``streaming/_exactly_once.py`` (shared with
 the dedup index): a per-CHECKPOINT high-water-mark ledger plus
-per-(checkpoint, batch) overwrite segments, so replays are idempotent
-and new streams draining into an existing index are not mistaken for
-replays (the ADVICE r8 ledger defect). Ledger commit is the last step.
+per-(checkpoint, batch) segments, so replays are idempotent and new
+streams draining into an existing index are not mistaken for replays
+(the ADVICE r8 ledger defect). Every directory write commits through
+``sinks/atomic.publish_dir``: a segment is published whole by one
+rename (the later of two writers drops its copy), and each delete
+publishes its own ``tombstones/del-<uuid>`` set.
 
 Concurrency (round 10 — VERDICT r9 #5): the "never run maintenance
 concurrently with a drain" CONVENTION is replaced by optimistic
@@ -48,7 +51,7 @@ publishing the next epoch with ``expected_version`` = the epoch it read:
 Any interleaving therefore loses at exactly one commit point and
 retries: a retrain racing a drain either publishes first (the drain's
 CAS fails and it redoes the batch against the new generation — its
-writes are idempotent per-(checkpoint,batch) overwrite segments) or
+writes are idempotent per-(checkpoint,batch) segments) or
 second (the retrain's CAS fails and it re-reads live rows including the
 new batch). Two maintenance jobs serialize the same way
 (``ConcurrentWriteError`` to the loser). Compaction no longer swaps the
@@ -58,9 +61,10 @@ does. Even the BOOTSTRAP is arbitrated: the first-ever batch trains the
 quantizer and publishes centroids + its posting segment as generation
 v0 with an EXPECT_EMPTY first-commit CAS, so of N streams racing to
 initialize an empty index exactly one quantizer wins and the losers
-redo their batch as ordinary assign-and-append against it — no shared
-mutable flat state anywhere (the flat layout remains supported
-read-only for pre-r10 indexes).
+redo their batch as ordinary assign-and-append against it. Every
+index root is therefore a published generation ``state/v=<n>``; an
+index with no generation has no root at all (a delete there is a
+no-op, and search raises).
 
 The ledger (stream identity) stays at ``index_dir/_ledger`` — it tracks
 the STREAM's progress, which is generation-independent.
@@ -79,6 +83,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -86,6 +91,7 @@ from pyspark.sql import functions as F
 from ..functions.rounding import hround
 from ..operators.clustering import _assign, kmeans_lloyd_full
 from ..operators.similarity import dot
+from ..sinks import atomic
 from . import _exactly_once as xo
 
 CENTROIDS_SCHEMA = "cell int, cvec array<double>"
@@ -94,7 +100,6 @@ POSTINGS_SCHEMA = (
 )
 _STATS = "_STATS.json"
 _GENERATION = "_GENERATION"
-_FLAT = "flat"
 
 
 # -- epoch log ---------------------------------------------------------------
@@ -104,42 +109,29 @@ def _state_store(spark, index_dir: str):
     return SnapshotStore(spark, os.path.join(index_dir, "state"))
 
 
-def _generation_path(store, version: int, index_dir: str) -> str:
+def _generation_path(store, version: int) -> str:
     """Collapse an epoch to its generation's data root: a DATA epoch
     (has a centroids dir) is its own generation; a POINTER epoch names
-    one (a store version, or 'flat' = the bootstrap layout directly
-    under index_dir). Pointers always name a data generation, never
+    one by store version. Pointers always name a data generation, never
     another pointer, so this never chains."""
     path = store.version_path(version)
     if os.path.isdir(os.path.join(path, "centroids")):
         return path
-    try:
-        with open(os.path.join(path, _GENERATION)) as f:
-            gen = json.load(f)["generation"]
-    except (OSError, ValueError, KeyError):
-        return index_dir
-    return index_dir if gen == _FLAT else store.version_path(int(gen))
+    with open(os.path.join(path, _GENERATION)) as f:
+        return store.version_path(json.load(f)["generation"])
+
+
+def _generation_id(root: str) -> int:
+    return int(os.path.basename(root)[2:])  # root = <state>/v=<n>
 
 
 def _index_root(spark, index_dir: str) -> str:
-    """Resolve the index's LIVE generation via the epoch log. An index
-    that has never published an epoch uses the flat bootstrap layout
-    directly under ``index_dir``. Sink, search, delete and compaction
-    all resolve through here, so a retrain/compaction redirects every
-    consumer at its next operation."""
-    state = os.path.join(index_dir, "state")
-    if os.path.isdir(state):
-        store = _state_store(spark, index_dir)
-        v = store.current_version()
-        if v is not None:
-            return _generation_path(store, v, index_dir)
-    return index_dir
-
-
-def _generation_id(store, root: str, index_dir: str):
-    if root == index_dir:
-        return _FLAT
-    return int(os.path.basename(root)[2:])
+    """Resolve the index's LIVE generation via the epoch log. Search
+    and drift resolve through here and writers re-resolve per attempt,
+    so a retrain/compaction redirects every consumer at its next
+    operation. Raises FileNotFoundError before the first generation."""
+    store = _state_store(spark, index_dir)
+    return _generation_path(store, store.current_version())
 
 
 def _expected(ev):
@@ -157,10 +149,10 @@ def _epoch_txn(
     (another batch, a delete, a retrain, a compaction) committed in
     between, the CAS raises and the transaction re-resolves and redoes
     its work against the fresh state — so ``work`` must be idempotent
-    per attempt (per-(checkpoint,batch) overwrite segments are; a
-    tombstone append may duplicate rows across attempts, which the
-    distinct anti-join and compaction fold absorb). Returns the root the
-    committed attempt ran against.
+    per attempt (per-(checkpoint,batch) segments are; a delete's retry
+    publishes a second tombstone set, which the distinct anti-join and
+    compaction fold absorb). The index must already have a generation.
+    Returns the root the committed attempt ran against.
 
     ``before_publish`` (idempotent, run after each attempt's ``work``
     but BEFORE the pointer CAS) is where the drain advances its stream
@@ -177,13 +169,11 @@ def _epoch_txn(
     store = _state_store(spark, index_dir)
     for _ in range(max_attempts):
         ev = store.current_version()
-        root = (
-            _generation_path(store, ev, index_dir) if ev is not None else index_dir
-        )
+        root = _generation_path(store, ev)
         work(root)
         if before_publish is not None:
             before_publish()
-        gen = _generation_id(store, root, index_dir)
+        gen = _generation_id(root)
 
         def pointer(staging: str, gen=gen) -> None:
             with open(os.path.join(staging, _GENERATION), "w") as f:
@@ -225,8 +215,8 @@ def _load_centroids(spark, path: str) -> dict[int, list[float]]:
 
 def _write_stats(centroids_path: str, trained_mean_d2) -> None:
     """Record the quantizer's training-time mean assignment distance
-    (the drift baseline) next to the centroids — written before the
-    completeness marker, so a complete quantizer always has stats."""
+    (the drift baseline) next to the centroids, inside the generation's
+    staging dir, so a published quantizer always has stats."""
     with open(os.path.join(centroids_path, _STATS), "w") as f:
         json.dump({"trained_mean_d2": float(trained_mean_d2)}, f)
 
@@ -293,7 +283,6 @@ def ann_index_sink(
                 [(c, v) for c, v in sorted(cents.items())], CENTROIDS_SCHEMA
             ).write.parquet(cpath)
             _write_stats(cpath, mean_d2)
-            xo.mark_complete(cpath)
             _assigned_segment(assigned, batch_id).write.parquet(
                 xo.segment(os.path.join(staging, "postings"), key, batch_id)
             )
@@ -312,12 +301,9 @@ def ann_index_sink(
         if xo.committed(index_dir, key, batch_id):
             return
         e = _doubles(batch_df, id_col, vec_col)
-        store = _state_store(spark, index_dir)
-        # bootstrap: no epoch yet and no legacy flat quantizer — train
-        # and publish generation v0 atomically (CAS-arbitrated)
-        if store.current_version() is None and not xo.is_complete(
-            os.path.join(index_dir, "centroids")
-        ):
+        # bootstrap: no generation yet — train and publish generation v0
+        # atomically (CAS-arbitrated)
+        if _state_store(spark, index_dir).current_version() is None:
             if _bootstrap(e, batch_id):
                 xo.commit(index_dir, key, batch_id)
                 return
@@ -330,8 +316,6 @@ def ann_index_sink(
             # against the new quantizer
             centroids_path = os.path.join(root, "centroids")
             postings_path = os.path.join(root, "postings")
-            # repair a legacy crashed in-place swap before touching postings
-            xo.recover_swap(postings_path)
             if not xo.committed(index_dir, key, batch_id):
                 # debris of a crashed attempt: no reader lists an
                 # uncommitted segment. A committed one (this txn's earlier
@@ -341,7 +325,7 @@ def ann_index_sink(
             cents = _load_centroids(spark, centroids_path)
             # atomic: a maintenance fold may be copying this same segment
             # into this generation right now (see _fold_missed_commits)
-            xo.publish_segment(
+            atomic.publish_dir(
                 _segment_rows(e, cents, batch_id), xo.segment(postings_path, key, batch_id)
             )
 
@@ -445,19 +429,24 @@ def delete_vectors(spark, index_dir: str, vec_ids, batch_id: int = 0) -> None:
     segments per delete; they append (vec_id, batch) tombstones and let
     search anti-join them until the next compaction folds them in.
     ``vec_ids`` may be a list or a 1-column DataFrame. Runs as an epoch
-    transaction, so a delete racing a retrain/compaction re-appends into
-    the surviving generation instead of tombstoning a dead one (a retry
-    may duplicate tombstone rows — absorbed by the distinct anti-join
-    and the next fold)."""
+    transaction, so a delete racing a retrain/compaction re-publishes
+    into the surviving generation instead of tombstoning a dead one.
+    Each attempt publishes its own ``tombstones/del-<uuid>`` set, so two
+    deletes never share one output path (a retry's duplicate rows are
+    absorbed by the distinct anti-join and the next fold). On an index
+    with no generation there is nothing to delete: no-op."""
+    if _state_store(spark, index_dir).current_version() is None:
+        return
     if isinstance(vec_ids, DataFrame):
         df = vec_ids.select(F.col(vec_ids.columns[0]).cast("bigint").alias("vec_id"))
     else:
         df = spark.createDataFrame([(int(v),) for v in vec_ids], "vec_id bigint")
 
     def work(root: str) -> None:
-        df.select(
-            "vec_id", F.lit(batch_id).cast("bigint").alias("batch")
-        ).write.mode("append").parquet(os.path.join(root, "tombstones"))
+        atomic.publish_dir(
+            df.select("vec_id", F.lit(batch_id).cast("bigint").alias("batch")),
+            os.path.join(root, "tombstones", f"del-{uuid.uuid4().hex}"),
+        )
 
     _epoch_txn(spark, index_dir, work)
 
@@ -477,7 +466,7 @@ def _live_postings_at(spark, index_dir: str, root: str,
     tomb_path = os.path.join(root, "tombstones")
     if not os.path.exists(tomb_path):
         return postings
-    tomb = spark.read.schema(TOMBSTONES_SCHEMA).parquet(tomb_path)
+    tomb = xo.read_table(spark, tomb_path, TOMBSTONES_SCHEMA)
     return postings.join(
         F.broadcast(tomb.select("vec_id").distinct()), "vec_id", "left_anti"
     )
@@ -505,7 +494,7 @@ def _fold_missed_commits(
     into the new generation (segment dirs are per-(checkpoint, batch)
     and content-deterministic, so the fold racing the drain's own
     rewrite of the same segment produces identical rows; both publish
-    through ``xo.publish_segment``, so whichever lands first stays and
+    through ``atomic.publish_dir``, so whichever lands first stays and
     existing destinations are skipped). Vectors are RE-ASSIGNED against the new
     generation's centroids on the way over — after a retrain the old
     cell ids are stale and a raw copy would bucket the rows where no
@@ -533,7 +522,7 @@ def _fold_missed_commits(
             if cents is None:
                 cents = _load_centroids(spark, os.path.join(new_root, "centroids"))
             rows = spark.read.schema(POSTINGS_SCHEMA).parquet(src)
-            if xo.publish_segment(
+            if atomic.publish_dir(
                 _assign(rows.select("vec_id", "v"), cents)
                 .select("vec_id", F.col("cluster").cast("int").alias("cell"), "v")
                 .join(rows.select("vec_id", "nrm", "batch"), "vec_id")
@@ -570,12 +559,7 @@ def compact_postings(spark, index_dir: str, partitions_per_cell: int = 1) -> int
     store = _state_store(spark, index_dir)
     for _ in range(5):
         ev = store.current_version()
-        root = (
-            _generation_path(store, ev, index_dir) if ev is not None else index_dir
-        )
-        # repair a LEGACY crashed in-place swap (pre-r10 layout) before
-        # reading — recover_swap is a no-op on generation-published dirs
-        xo.recover_swap(os.path.join(root, "postings"))
+        root = _generation_path(store, ev)
         hwms_at_read = xo._hwms(index_dir)
         live = _live_postings_at(
             spark, index_dir, root, hwms=hwms_at_read
@@ -666,10 +650,7 @@ def retrain_index(spark, index_dir: str, n_cells: int = 8, iters: int = 2) -> in
     store = _state_store(spark, index_dir)
     for _ in range(5):
         ev = store.current_version()
-        root = (
-            _generation_path(store, ev, index_dir) if ev is not None else index_dir
-        )
-        xo.recover_swap(os.path.join(root, "postings"))  # legacy crash debris
+        root = _generation_path(store, ev)
         hwms_at_read = xo._hwms(index_dir)
         live = _live_postings_at(
             spark, index_dir, root, hwms=hwms_at_read
@@ -689,7 +670,6 @@ def retrain_index(spark, index_dir: str, n_cells: int = 8, iters: int = 2) -> in
                 [(c, v) for c, v in sorted(cents.items())], CENTROIDS_SCHEMA
             ).write.parquet(cpath)
             _write_stats(cpath, mean_d2)
-            xo.mark_complete(cpath)
             (
                 reassigned.select(
                     "vec_id",
@@ -742,8 +722,7 @@ def vacuum_index_state(spark, index_dir: str) -> list[int]:
     cur = store.current_version()
     if cur is None:
         return []
-    root = _generation_path(store, cur, index_dir)
-    floor = cur if root == index_dir else int(os.path.basename(root)[2:])
+    floor = _generation_id(_generation_path(store, cur))
     dropped = []
     for v in store._versions_on_disk():
         if v < floor:

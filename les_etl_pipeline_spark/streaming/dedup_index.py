@@ -20,10 +20,11 @@ join is shuffle-free on the corpus side):
 
 Exactly-once is provided by ``streaming/_exactly_once.py``: a
 per-CHECKPOINT high-water-mark ledger plus per-(checkpoint, batch)
-segment directories written with overwrite, so replays are idempotent
-and a NEW stream draining into an existing index starts cleanly at its
-own batch 0 instead of being mistaken for a replay (the ADVICE r8
-ledger defect). The ledger commit is the last step of each batch.
+segment directories, each published whole by ``sinks/atomic.publish_dir``,
+so replays are idempotent and a NEW stream draining into an existing
+index starts cleanly at its own batch 0 instead of being mistaken for a
+replay (the ADVICE r8 ledger defect). The ledger commit is the last
+step of each batch.
 
 Per micro-batch cost is O(batch + candidates): ONE equi-join of the
 batch's postings against the persisted index plus the standard capped
@@ -55,6 +56,7 @@ from pyspark.sql import functions as F
 
 from ..functions.rounding import hround
 from ..operators.dedup import connected_components, ngram_jaccard_pairs, shingles
+from ..sinks import atomic
 from ..sinks.snapshot_store import SnapshotStore
 from . import _exactly_once as xo
 
@@ -189,7 +191,7 @@ def dedup_index_sink(
         # an empty corpus (single-writer contract makes this race-free).
         # The cluster table needs no repair call: its SnapshotStore
         # versions are immutable and self-healing.
-        xo.recover_swap(postings_path)
+        atomic.recover(postings_path)
         # a replay must not see its own crashed partial segments as corpus
         xo.clear_segments(tables, key, batch_id)
         # one materialized distinct-shingle-hash array per doc, shared by
@@ -299,22 +301,23 @@ def dedup_index_sink(
         )
         # idempotent writes: per-(checkpoint, batch) segment dirs, then
         # the ledger commit LAST — a crash anywhere in between replays
-        # into identical overwrites (see _exactly_once crash matrix)
-        verdicts.write.mode("overwrite").parquet(
-            xo.segment(verdicts_path, key, batch_id)
-        )
+        # into identical segments (see _exactly_once crash matrix)
+        atomic.publish_dir(verdicts, xo.segment(verdicts_path, key, batch_id))
         new_sh = sh_d.join(
             verdicts.where(F.col("verdict") == "new").select("doc_id"), "doc_id"
         )
-        new_sh.select(F.explode("shs").alias("sh"), "doc_id").write.mode(
-            "overwrite"
-        ).parquet(xo.segment(postings_path, key, batch_id))
-        new_sh.select("doc_id", F.size("shs").alias("n_sh")).write.mode(
-            "overwrite"
-        ).parquet(xo.segment(sizes_path, key, batch_id))
-        edges.withColumn("batch", F.lit(batch_id).cast("bigint")).write.mode(
-            "overwrite"
-        ).parquet(xo.segment(pairs_path, key, batch_id))
+        atomic.publish_dir(
+            new_sh.select(F.explode("shs").alias("sh"), "doc_id"),
+            xo.segment(postings_path, key, batch_id),
+        )
+        atomic.publish_dir(
+            new_sh.select("doc_id", F.size("shs").alias("n_sh")),
+            xo.segment(sizes_path, key, batch_id),
+        )
+        atomic.publish_dir(
+            edges.withColumn("batch", F.lit(batch_id).cast("bigint")),
+            xo.segment(pairs_path, key, batch_id),
+        )
         # cluster maintenance: fold this batch's merge events into the
         # persisted component table. A merge RELABELS rows, so the table
         # is not append-only — but relabeling only touches the buckets
@@ -405,21 +408,19 @@ def compact_index(
     files AND apply the corpus-level stop-shingle cap — shingles whose
     MERGED frequency exceeds ``max_shingle_freq`` are dropped from the
     index (they ceased to be discriminative; the per-batch cap can't
-    see cross-segment totals). Staging-rewrite-then-swap, same as
-    ``ann_index.compact_postings``. Returns (rows_before, rows_after).
+    see cross-segment totals). Rewrites by ``atomic.replace_dir``
+    (staging write, then swap). Returns (rows_before, rows_after).
 
     Dropping a stop shingle only removes CANDIDATES whose overlap was
     dominated by boilerplate — the exact-Jaccard verify step still
     applies to every surviving candidate, so precision is unaffected;
     this is the identical precision contract as the batch operator's
     ``max_shingle_freq``."""
-    import shutil
-
     postings_path = os.path.join(index_dir, "postings")
     # repair any half-finished previous swap, then sweep abandoned-crash
     # debris (never concurrent with an active drain, per the
     # single-writer contract)
-    xo.recover_swap(postings_path)
+    atomic.recover(postings_path)
     xo.drop_uncommitted_segments(
         index_dir,
         [postings_path, os.path.join(index_dir, "sizes"), os.path.join(index_dir, "verdicts")],
@@ -435,11 +436,5 @@ def compact_index(
             .select("sh")
         )
         live = posts.join(freq, "sh", "left_anti")
-    staging = postings_path + ".staging"
-    backup = postings_path + ".old"
-    live.repartition(partitions, "sh").write.mode("overwrite").parquet(staging)
-    after = spark.read.schema(POSTINGS_SCHEMA).parquet(staging).count()
-    os.rename(postings_path, backup)
-    os.rename(staging, postings_path)
-    shutil.rmtree(backup)
-    return before, after
+    atomic.replace_dir(live.repartition(partitions, "sh"), postings_path)
+    return before, spark.read.schema(POSTINGS_SCHEMA).parquet(postings_path).count()

@@ -24,11 +24,11 @@ shared exactly-once machinery (per-(checkpoint, batch) segments +
 high-water-mark ledger, ``streaming/_exactly_once.py``): reading state
 is "row with the maximum day per series", which is replay-stable
 because a series' carried day strictly increases — no swap, no pointer
-file, and a crashed batch replays into byte-identical segments.
-``compact_state`` rewrites the log to one row per series
-(staging-rewrite-then-swap with ``recover_swap`` repair), bounding the
-log at (series x 1) — the compaction the chaos test drives a quiet
-series across.
+file, and a crashed batch replays into byte-identical segments (each
+published whole by ``sinks/atomic.publish_dir``). ``compact_state``
+rewrites the log to one row per series (``atomic.replace_dir``, with
+``atomic.recover`` repair), bounding the log at (series x 1) — the
+compaction the chaos test drives a quiet series across.
 
 Scale shape: per batch the mini-frame is (batch rows + one carried row
 per touched series); densification stays at calendar grain exactly as
@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import gapfill_daily
+from ..sinks import atomic
 from . import _exactly_once as xo
 
 
@@ -114,7 +115,7 @@ def gapfill_sink(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if xo.committed(index_dir, key, batch_id):
             return
-        xo.recover_swap(state_path)
+        atomic.recover(state_path)
         xo.clear_segments([filled_path, state_path], key, batch_id)
         obs = (
             batch_df.where(
@@ -147,15 +148,17 @@ def gapfill_sink(
         new_rows = filled.join(
             st.select(*scols, day_col), scols + [day_col], "left_anti"
         )
-        new_rows.select(*[F.col(c) for c in new_rows.columns]).write.mode(
-            "overwrite"
-        ).parquet(xo.segment(filled_path, key, batch_id))
+        atomic.publish_dir(
+            new_rows.select(*[F.col(c) for c in new_rows.columns]),
+            xo.segment(filled_path, key, batch_id),
+        )
         # state upsert: each touched series' newest observation
-        obs.groupBy(*scols).agg(
-            F.max(day_col).alias(day_col),
-            F.max_by(value_col, day_col).alias(value_col),
-        ).write.mode("overwrite").parquet(
-            xo.segment(state_path, key, batch_id)
+        atomic.publish_dir(
+            obs.groupBy(*scols).agg(
+                F.max(day_col).alias(day_col),
+                F.max_by(value_col, day_col).alias(value_col),
+            ),
+            xo.segment(state_path, key, batch_id),
         )
         xo.commit(index_dir, key, batch_id)
 
@@ -304,14 +307,11 @@ def compact_state(
     value_col: str, state_schema: str, partitions: int = 4
 ) -> tuple[int, int]:
     """Rewrite the state log to ONE row per series (the current carried
-    observation), staging-rewrite-then-swap with ``recover_swap``
-    repair — same protocol as the index compactors; never concurrent
-    with an active drain (single-writer contract). Returns
-    (rows_before, rows_after)."""
-    import shutil
-
+    observation), by ``atomic.replace_dir`` — same protocol as the
+    dedup index compactor; never concurrent with an active drain
+    (single-writer contract). Returns (rows_before, rows_after)."""
     state_path = os.path.join(index_dir, "state")
-    xo.recover_swap(state_path)
+    atomic.recover(state_path)
     if not os.path.isdir(state_path):
         # nothing drained yet — same guard as read_state/gapfill_sink
         # (ADVICE r13: compacting a virgin sink raised from read_table
@@ -324,12 +324,5 @@ def compact_state(
         F.max(day_col).alias(day_col),
         F.max_by(value_col, day_col).alias(value_col),
     )
-    staging, backup = state_path + ".staging", state_path + ".old"
-    cur.repartition(partitions, *series_cols).write.mode("overwrite").parquet(
-        staging
-    )
-    after = spark.read.schema(state_schema).parquet(staging).count()
-    os.rename(state_path, backup)
-    os.rename(staging, state_path)
-    shutil.rmtree(backup)
-    return before, after
+    atomic.replace_dir(cur.repartition(partitions, *series_cols), state_path)
+    return before, spark.read.schema(state_schema).parquet(state_path).count()

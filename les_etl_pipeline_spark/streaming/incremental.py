@@ -10,7 +10,9 @@ storage — per batch it reads state, merges one batch's partials, and
 atomically replaces the state. That is the continuous-materialized-view
 pattern: at 100 TB the stream never rescans history, the state table is
 group-cardinality-sized, and exactly-once comes from the checkpointed
-batch id (a replayed batch id is skipped via the ledger column).
+batch id (a replayed batch id is skipped via the ledger column). The
+state is swapped by ``sinks/atomic.replace_dir``, so a crash leaves the
+old or the new state, never a half-written one.
 """
 
 from __future__ import annotations
@@ -19,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..sinks import atomic
 
 STATE_SCHEMA = "grp string, n bigint, s double, mn double, mx double, last_batch bigint"
 
@@ -44,6 +48,7 @@ def incremental_agg_to_state(
             F.min(F.col(value_col).cast("double")).alias("mn"),
             F.max(F.col(value_col).cast("double")).alias("mx"),
         )
+        atomic.recover(state_path)  # a crashed swap must not read as "no state"
         if os.path.exists(state_path):
             state = spark.read.schema(STATE_SCHEMA).parquet(state_path)
             # exactly-once: foreachBatch can replay a batch after a
@@ -63,14 +68,10 @@ def incremental_agg_to_state(
             )
         else:
             merged = partial
-        out = merged.withColumn("last_batch", F.lit(batch_id).cast("bigint"))
-        # state tables are group-cardinality-sized: collect-free, but tiny
-        # enough that a single overwrite is atomic-enough for parquet; a
-        # Delta MERGE replaces this rewrite where the format is available
-        tmp = state_path + "._staging"
-        out.write.mode("overwrite").parquet(tmp)
-        final = spark.read.schema(STATE_SCHEMA).parquet(tmp)
-        final.write.mode("overwrite").parquet(state_path)
+        atomic.replace_dir(
+            merged.withColumn("last_batch", F.lit(batch_id).cast("bigint")),
+            state_path,
+        )
 
     q = (
         stream_df.writeStream.foreachBatch(merge_batch)

@@ -69,6 +69,45 @@ def test_register_rejects_duplicate_names():
     assert (QUERIES[name], ORACLES[name]) == before
 
 
+def test_query_temp_views_are_prefixed_and_unique():
+    """Queries are built concurrently (the threaded sweep, the
+    plan-hygiene fixture) in one session, whose temp views are shared:
+    a query-local view must be named ``<query>_...`` so no two queries
+    register the same name. Source scan over every query module."""
+    import ast
+    import pathlib
+
+    qdir = pathlib.Path(__file__).parents[1] / "les_etl_pipeline_spark" / "queries"
+    seen: dict[str, str] = {}
+    for path in sorted(qdir.glob("*.py")):
+        tree = ast.parse(path.read_text())
+        owner = {}
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for d in fn.decorator_list:
+                if (
+                    isinstance(d, ast.Call)
+                    and getattr(d.func, "id", None) == "register"
+                ):
+                    for node in ast.walk(fn):
+                        owner[id(node)] = d.args[0].value
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "createOrReplaceTempView"
+            ):
+                continue
+            where = f"{path.name}:{node.lineno}"
+            query = owner.get(id(node))
+            assert query is not None, f"{where}: view registered outside a query"
+            arg = node.args[0]
+            assert isinstance(arg, ast.Constant), f"{where}: view name not a literal"
+            assert arg.value.startswith(f"{query}_"), f"{where}: {arg.value!r}"
+            assert arg.value not in seen, f"{where}: {arg.value!r} also in {seen[arg.value]}"
+            seen[arg.value] = where
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_vs_oracle(spark, duck, sf_dir, name):
     sdf = QUERIES[name](spark, sf_dir)

@@ -284,4 +284,4 @@ def test_tx_meta_durable_write_leaves_no_debris(spark, store):
     with open(os.path.join(vd, "_TX_META")) as f:
         meta = _json.load(f)
     assert meta["partition_by"] == "p" and meta["touched"] == ["p=b"]
-    assert not [n for n in os.listdir(vd) if n.startswith("._txmeta.")]
+    assert not [n for n in os.listdir(vd) if n.startswith("._TX_META.")]

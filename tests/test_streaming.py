@@ -234,8 +234,12 @@ def test_incremental_agg_state_matches_full_recompute(spark, stream_dir, tmp_pat
     """Streaming MV maintenance: after draining the stream one file per
     micro-batch, the maintained state table equals the from-scratch
     aggregate over all events — merge(partials) == recompute, the
-    streaming face of agg_incremental_merge. Re-running against the same
-    checkpoint is a no-op (exactly-once per batch id)."""
+    streaming face of agg_incremental_merge. The state is swapped in
+    once per batch (no staging or backup dir survives a drain).
+    Re-running against the same checkpoint is a no-op (exactly-once per
+    batch id)."""
+    import os
+
     from les_etl_pipeline_spark.streaming import incremental as SI
 
     state = str(tmp_path / "state")
@@ -247,6 +251,8 @@ def test_incremental_agg_state_matches_full_recompute(spark, stream_dir, tmp_pat
         state_path=state,
         checkpoint_dir=ckpt,
     )
+    for debris in ("._staging", ".staging", ".old"):
+        assert not os.path.exists(state + debris)
     got = {
         r["grp"]: (r["n"], r["s"], r["mn"], r["mx"], r["avg"])
         for r in SI.read_state(spark, state).collect()
@@ -841,19 +847,54 @@ def test_streaming_ann_index_retrain_swap(spark, sf_dir, tmp_path):
     assert any(s.startswith("seg-") for s in segs)
 
 
-def test_compaction_swap_crash_recovery(spark, sf_dir, tmp_path):
-    """Compaction crash windows under the r10 generation-publish
-    protocol: (a) LEGACY debris from a pre-r10 in-place swap that died
-    between its renames (table absent, complete staging beside it) must
-    be healed by the preamble before the rewrite; (b) a crash DURING the
-    generation build must leave the old generation live and the store
-    clean (publish_dir discards its staging — the commit point is the
-    version claim, so there is no half-compacted state to recover).
-    Search results stay identical throughout."""
+def test_compaction_swap_crash_recovery(spark, sf_dir, tmp_path, monkeypatch):
+    """Compaction crash windows. (a) ``atomic.replace_dir``, the swap
+    behind the dedup-index, gap-fill and small-file compactors: a crash
+    between its two renames (table absent, complete staging beside it)
+    is healed by adopting the staging; a crash after the staging write
+    with the table intact drops the staging. (b) Under the ANN
+    generation-publish protocol, a crash DURING the generation build
+    must leave the old generation live and the store clean (publish_dir
+    discards its staging — the commit point is the version claim, so
+    there is no half-compacted state to recover). Search results stay
+    identical throughout."""
     import os
 
     from les_etl_pipeline_spark.catalog import table
+    from les_etl_pipeline_spark.sinks import atomic
     from les_etl_pipeline_spark.streaming import ann_index as SA
+
+    # (a) replace_dir crash windows, injected at each of its two renames
+    tbl = str(tmp_path / "swap_tbl")
+    atomic.replace_dir(spark.range(3), tbl)
+    real_rename = os.rename
+
+    def crash_on(step):
+        def rename(src, dst):
+            if dst.endswith(step):
+                raise RuntimeError("injected swap crash")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(atomic.os, "rename", rename)
+        with pytest.raises(RuntimeError, match="injected swap crash"):
+            atomic.replace_dir(spark.range(10, 15), tbl)
+        monkeypatch.setattr(atomic.os, "rename", real_rename)
+
+    def ids():
+        return sorted(r.id for r in spark.read.parquet(tbl).collect())
+
+    crash_on("swap_tbl")  # table already moved to .old, staging complete
+    assert not os.path.exists(tbl) and os.path.isdir(tbl + ".staging")
+    atomic.recover(tbl)
+    assert ids() == list(range(10, 15))  # staging adopted
+    crash_on(".old")  # staging written, table intact
+    assert os.path.isdir(tbl + ".staging")
+    atomic.replace_dir(spark.range(20, 22), tbl)  # recovers, then swaps
+    assert ids() == [20, 21]
+    crash_on(".old")
+    atomic.recover(tbl)
+    assert ids() == [20, 21]  # the never-swapped staging was dropped
+    assert sorted(os.listdir(tmp_path)) == ["swap_tbl"]
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     stream_dir = str(tmp_path / "swap_stream")
@@ -866,21 +907,6 @@ def test_compaction_swap_crash_recovery(spark, sf_dir, tmp_path):
     before = sorted(
         map(tuple, SA.ivf_search_index(spark, index_dir, queries, k=5, n_probe=2).collect())
     )
-    posts = SA._index_root(spark, index_dir) + "/postings"
-
-    # (a) legacy swap crash: table absent, staging complete
-    SA._live_postings(spark, index_dir).repartition(4, "cell").write.parquet(
-        posts + ".staging"
-    )
-    os.rename(posts, posts + ".old.gone")  # simulate: old moved, not cleaned
-    os.rename(posts + ".old.gone", posts + ".old")
-    assert not os.path.exists(posts)
-    n = SA.compact_postings(spark, index_dir)  # recovery preamble adopts staging
-    assert n == SA._live_postings(spark, index_dir).count()
-    after = sorted(
-        map(tuple, SA.ivf_search_index(spark, index_dir, queries, k=5, n_probe=2).collect())
-    )
-    assert after == before
 
     # (b) crash mid-generation-build: the old generation stays live, no
     # .tx staging survives, and the next compaction succeeds
@@ -980,7 +1006,7 @@ def test_drain_racing_retrain_redoes_batch_into_new_generation(
     work against the NEW generation — assigned by the new quantizer,
     landing in the new postings — then commit its ledger exactly once."""
     from les_etl_pipeline_spark.catalog import table
-    from les_etl_pipeline_spark.streaming import _exactly_once as xo
+    from les_etl_pipeline_spark.sinks import atomic
     from les_etl_pipeline_spark.streaming import ann_index as SA
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -994,7 +1020,7 @@ def test_drain_racing_retrain_redoes_batch_into_new_generation(
     )
     n_b1 = b1.count()
 
-    real_publish = xo.publish_segment
+    real_publish = atomic.publish_dir
     state = {"n": 0}
 
     def retrain_then_publish(*a, **kw):
@@ -1004,13 +1030,13 @@ def test_drain_racing_retrain_redoes_batch_into_new_generation(
             SA.retrain_index(spark, index_dir)
         return real_publish(*a, **kw)
 
-    monkeypatch.setattr(xo, "publish_segment", retrain_then_publish)
+    monkeypatch.setattr(atomic, "publish_dir", retrain_then_publish)
     s2 = str(tmp_path / "race2_s2")
     b2.coalesce(1).write.mode("append").parquet(s2)
     SA.ann_index_sink(
         SA.read_vector_stream(spark, s2), index_dir, str(tmp_path / "race2_c2")
     )
-    monkeypatch.setattr(xo, "publish_segment", real_publish)
+    monkeypatch.setattr(atomic, "publish_dir", real_publish)
 
     assert state["n"] == 2  # the batch's work ran twice: lost CAS, redid
     root = SA._index_root(spark, index_dir)
@@ -1322,6 +1348,7 @@ def test_publish_segment_second_writer_loses_cleanly(spark, tmp_path, monkeypatc
     ``_temporary`` dir and could fail each other's tasks."""
     import os
 
+    from les_etl_pipeline_spark.sinks import atomic
     from les_etl_pipeline_spark.streaming import _exactly_once as xo
 
     table_path = str(tmp_path / "postings")
@@ -1330,15 +1357,43 @@ def test_publish_segment_second_writer_loses_cleanly(spark, tmp_path, monkeypatc
     real_rename = os.rename
 
     def rename_after_rival(src, target):
-        monkeypatch.setattr(xo.os, "rename", real_rename)
-        assert xo.publish_segment(rows, dst)  # B lands first
+        monkeypatch.setattr(atomic.os, "rename", real_rename)
+        assert atomic.publish_dir(rows, dst)  # B lands first
         real_rename(src, target)  # A's rename now finds dst taken
 
-    monkeypatch.setattr(xo.os, "rename", rename_after_rival)
-    assert not xo.publish_segment(rows, dst)
+    monkeypatch.setattr(atomic.os, "rename", rename_after_rival)
+    assert not atomic.publish_dir(rows, dst)
     assert os.listdir(table_path) == [os.path.basename(dst)]
     got = xo.read_table(spark, table_path, "vec_id bigint").collect()
     assert sorted(r.vec_id for r in got) == list(range(6))
+
+
+def test_delete_before_first_batch_is_noop(spark, sf_dir, tmp_path):
+    """A delete on an index that has no generation yet writes nothing:
+    it used to publish a pointer epoch naming a root with no quantizer,
+    and every later drain failed on the missing centroids."""
+    import os
+
+    from les_etl_pipeline_spark.catalog import table
+    from les_etl_pipeline_spark.streaming import ann_index as SA
+
+    index_dir = str(tmp_path / "early_del_idx")
+    SA.delete_vectors(spark, index_dir, [3])
+    assert not os.path.exists(index_dir + "/tombstones")
+    emb = (
+        table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding")
+        .orderBy("vec_id")
+        .limit(40)
+    )
+    stream_dir = str(tmp_path / "early_del_stream")
+    emb.coalesce(1).write.parquet(stream_dir)
+    SA.ann_index_sink(
+        SA.read_vector_stream(spark, stream_dir), index_dir, str(tmp_path / "early_del_c")
+    )
+    drained = sorted(r.vec_id for r in emb.collect())
+    live = sorted(r.vec_id for r in SA._live_postings(spark, index_dir).collect())
+    assert len(drained) == 40 and live == drained
 
 
 def test_vacuum_index_state_keeps_live_generation(spark, sf_dir, tmp_path):
