@@ -3,7 +3,10 @@
 Re-expresses the reference's cast_to_datatype
 (/root/reference/src/les_etl_pipeline/utils/silver_funcs.py:15-34), which
 loops 127 sequential withColumn calls (plan bloat, O(n^2) analysis —
-SURVEY.md §4.2), as a single select. Cast semantics preserved exactly:
+SURVEY.md §4.2), as a single ``selectExpr``. Each column's cast has ONE
+definition, as SQL text (``_cast_sql``): parsing 127 short strings costs
+the driver one py4j command per column, where the Column-API build of
+the same expressions sent one per node. Cast semantics preserved exactly:
 
     BooleanType   'y' -> True, anything else including NULL -> False (F7)
     DateType      date parse, non-conforming -> NULL (F8)
@@ -24,37 +27,42 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .normalize import ident
 
-def cast_expr(colname: str, dtype: T.DataType) -> Column:
-    """Build the cast expression for one column per reference semantics."""
-    c = F.col(colname)
+
+def _cast_sql(colname: str, dtype: T.DataType) -> str:
+    """The SQL text of one column's cast per reference semantics."""
+    c = ident(colname)
     if isinstance(dtype, T.BooleanType):
         # silver_funcs.py:24-27 — exact match on 'y' (ingest already
         # lowercased, F11); null -> False (diverges from SQL 3VL)
-        expr = F.when(c.cast("string") == "y", F.lit(True)).otherwise(F.lit(False))
+        expr = f"CASE WHEN CAST({c} AS STRING) = 'y' THEN true ELSE false END"
     elif isinstance(dtype, T.DateType):
         # silver_funcs.py:28-29 — to_date(c) with no format IS cast-to-date;
         # try_cast keeps the malformed->NULL contract under ANSI
-        expr = c.try_cast("date")
+        expr = f"try_cast({c} AS DATE)"
     elif isinstance(dtype, T.DoubleType):
-        expr = F.round(c.try_cast("double"), 2)  # silver_funcs.py:30-31
+        expr = f"round(try_cast({c} AS DOUBLE), 2)"  # silver_funcs.py:30-31
     elif isinstance(dtype, T.IntegerType):
         # silver_funcs.py:32-33 — legacy string->int truncates decimal
         # strings ('4.2' -> 4) and NULLs garbage/overflow; try_cast straight
         # to int would NULL '4.2', so go through double (exact for the full
         # int range) and truncate, which ANSI permits for numeric->int
-        expr = c.try_cast("double").try_cast("int")
+        expr = f"try_cast(try_cast({c} AS DOUBLE) AS INT)"
     else:
-        expr = c.try_cast(dtype)
-    return expr.alias(colname)
+        expr = f"try_cast({c} AS {dtype.simpleString()})"
+    return f"{expr} AS {c}"
+
+
+def cast_expr(colname: str, dtype: T.DataType) -> Column:
+    """The cast expression for one column per reference semantics."""
+    return F.expr(_cast_sql(colname, dtype))
 
 
 def cast_to_datatype(df: DataFrame, cast_map: dict[str, T.DataType]) -> DataFrame:
     """Apply a {column: DataType} cast map in one projection; columns not
     in the map pass through unchanged. Missing columns are skipped (files
     may carry column subsets — generate_asset_silver.py:31-44)."""
-    exprs = [
-        cast_expr(c, cast_map[c]) if c in cast_map else F.col(c)
-        for c in df.columns
-    ]
-    return df.select(*exprs)
+    return df.selectExpr(
+        *[_cast_sql(c, cast_map[c]) if c in cast_map else ident(c) for c in df.columns]
+    )

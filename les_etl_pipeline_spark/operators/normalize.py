@@ -1,8 +1,14 @@
 """Ingest normalization: the reference's driver-side CSV row cleaning
 (S4/F11-F13, /root/reference/src/les_etl_pipeline/utils/bronze_funcs.py:
-62-143) re-expressed as native Column transforms over a distributed scan —
-no /tmp downloads, no Python row loops, no driver materialization
+62-143) re-expressed as native Catalyst expressions over a distributed
+scan — no /tmp downloads, no Python row loops, no driver materialization
 (SURVEY.md §4.2 anti-pattern 1).
+
+The per-column builders (cell cleaning, the row checksum) each have ONE
+definition as SQL text, applied as a single ``selectExpr``/``F.expr``: at
+the 127-column reference width a Column-API build sends tens of thousands
+of py4j commands (one per node of every cell's expression), the parsed
+text sends one per column.
 
 Semantics preserved:
 - null markers: empty string, 'ND<digit>'-prefixed, 'No Collateral' -> NULL
@@ -24,27 +30,34 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: null markers (bronze_funcs.py:97-104). ND1..ND7 are EDW "no data" codes.
-ND_PATTERN = r"^ND\d?"
+#: (Java's \d is [0-9]; spelled as a class so the SQL text needs no escape)
+ND_PATTERN = "^ND[0-9]?"
 
 
-def clean_cell(c: Column | str) -> Column:
+def ident(name: str) -> str:
+    """``name`` as a SQL identifier (backquoted, so any header cell works)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _clean_sql(name: str) -> str:
+    c = ident(name)
+    t = f"trim({c})"
+    return (
+        f"CASE WHEN {c} IS NULL OR {t} = '' OR {t} RLIKE '{ND_PATTERN}'"
+        f" OR {t} = 'No Collateral' THEN NULL ELSE lower({t}) END"
+    )
+
+
+def clean_cell(name: str) -> Column:
     """F11: null-marker normalize + lower/trim. NULL-safe."""
-    c = F.col(c) if isinstance(c, str) else c
-    t = F.trim(c)
-    return F.when(
-        c.isNull()
-        | (t == "")
-        | t.rlike(ND_PATTERN)
-        | (t == "No Collateral"),
-        F.lit(None),
-    ).otherwise(F.lower(t))
+    return F.expr(_clean_sql(name))
 
 
 def normalize_cells(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Apply clean_cell to every (or the given) column in ONE projection."""
     target = set(cols) if cols is not None else set(df.columns)
-    return df.select(
-        *[clean_cell(c).alias(c) if c in target else F.col(c) for c in df.columns]
+    return df.selectExpr(
+        *[f"{_clean_sql(c)} AS {ident(c)}" if c in target else ident(c) for c in df.columns]
     )
 
 
@@ -85,8 +98,8 @@ def checksum(primary_cols: list[str]) -> Column:
     The reference's concat() nulls the whole checksum when any key part is
     null (SURVEY.md §7.4(3)); concat_ws over a unit separator keeps it
     null-safe."""
-    cols = [F.col("ed_code"), F.col("pcd"), *[F.col(c) for c in primary_cols]]
-    return F.md5(F.concat_ws("\x1f", *[c.cast("string") for c in cols]))
+    parts = ", ".join(f"CAST({ident(c)} AS STRING)" for c in ["ed_code", "pcd", *primary_cols])
+    return F.expr(f"md5(concat_ws('\x1f', {parts}))")
 
 
 def part_key() -> Column:

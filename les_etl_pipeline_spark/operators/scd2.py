@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .normalize import ident
+
 
 def _key(primary_cols: list[str]) -> list[str]:
     return ["ed_code", "pcd", *primary_cols]
@@ -58,15 +60,15 @@ def scd2_merge(
     state of the table (history rows + closed-out rows + current rows).
     """
     key = _key(primary_cols)
-    payload = [c for c in old.columns if c not in
-               ("valid_from", "valid_to", "iscurrent", "checksum")]
+    # old's columns as SQL text: one py4j command per name per projection
+    cols = [ident(c) for c in old.columns]
 
     history = old.where(F.col("iscurrent") == 0)
     current = old.where(F.col("iscurrent") == 1)
 
-    incoming = _one_row_per_key(new.select(*old.columns), key)  # align + dedupe
-    inc_keyed = incoming.select(
-        *[F.col(c).alias(f"_n_{c}") for c in incoming.columns]
+    incoming = _one_row_per_key(new.selectExpr(*cols), key)  # align + dedupe
+    inc_keyed = incoming.selectExpr(
+        *[f"{ident(c)} AS {ident('_n_' + c)}" for c in incoming.columns]
     )
     join_cond = [F.col(k).eqNullSafe(F.col(f"_n_{k}")) for k in key]
 
@@ -75,27 +77,27 @@ def scd2_merge(
     # unchanged current rows (no incoming row, or same checksum): keep as-is
     keep = matched.where(
         F.col("_n_checksum").isNull() | (F.col("_n_checksum") == F.col("checksum"))
-    ).select(*old.columns)
+    ).selectExpr(*cols)
 
     # changed rows: close out the old version
     closed = (
         matched.where(
             F.col("_n_checksum").isNotNull() & (F.col("_n_checksum") != F.col("checksum"))
         )
-        .select(*old.columns)
+        .selectExpr(*cols)
         .withColumn("valid_to", F.current_timestamp())
         .withColumn("iscurrent", F.lit(0))
     )
 
     # incoming rows that are genuinely new or changed become current rows
-    cur_keyed = current.select(
-        *[F.col(k).alias(f"_o_{k}") for k in key], F.col("checksum").alias("_o_checksum")
+    cur_keyed = current.selectExpr(
+        *[f"{ident(c)} AS {ident('_o_' + c)}" for c in [*key, "checksum"]]
     )
     inc_join = [F.col(k).eqNullSafe(F.col(f"_o_{k}")) for k in key]
     inserts = (
         incoming.join(cur_keyed, inc_join, "left")
         .where(F.col("_o_checksum").isNull() | (F.col("_o_checksum") != F.col("checksum")))
-        .select(*old.columns)
+        .selectExpr(*cols)
     )
 
     return history.unionByName(keep).unionByName(closed).unionByName(inserts)

@@ -141,6 +141,16 @@ def _rule_checks(
     return checks
 
 
+def _all(checks: list[Column]) -> Column:
+    """AND of ``checks`` as a balanced tree (True for none)."""
+    if not checks:
+        return F.lit(True)
+    if len(checks) == 1:
+        return checks[0]
+    mid = len(checks) // 2
+    return _all(checks[:mid]) & _all(checks[mid:])
+
+
 def compile_rules(
     rules: dict[str, dict],
     strict_columns: bool = True,
@@ -161,6 +171,14 @@ def compile_rules(
     With ``strict_columns`` and ``df_columns`` given, columns present in
     the data but absent from the schema fail every row (Cerberus
     unknown-key semantics) — evaluated as a constant, not per row.
+
+    ``flag`` is a BALANCED AND tree over the checks (depth ~log2(checks)),
+    not a left-deep chain: the optimizer pushes the NOT in ``qc_errors``
+    and in the bad split through it one level per BooleanSimplification
+    pass, so a chain of the 145 ASSET_RULES checks ran the optimizer's
+    batch into its 100-iteration cap. AND is associative in three-valued
+    logic and the tree keeps the checks' left-to-right order and
+    short-circuit, so the value is the chain's.
     """
     checks: dict[str, tuple[Column, Column]] = {}
     for colname, rule in rules.items():
@@ -179,9 +197,7 @@ def compile_rules(
         for u in unknown:
             checks[f"{u}.unknown_column"] = (F.lit(False), F.lit("unknown field"))
 
-    flag = F.lit(True)
-    for check, _ in checks.values():
-        flag = flag & check
+    flag = _all([check for check, _ in checks.values()])
 
     if cerberus_messages:
         # {col: [msg, ...]} over columns with at least one failure,

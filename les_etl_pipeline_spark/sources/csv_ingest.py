@@ -1,7 +1,7 @@
 """EDW CSV ingest — distributed re-expression of the reference's
 driver-side parse (S4, /root/reference/src/les_etl_pipeline/utils/
 bronze_funcs.py:62-143): spark.read.csv does the scanning (vectorized,
-parallel, no /tmp downloads), Column expressions do the cleaning.
+parallel, no /tmp downloads), Catalyst expressions do the cleaning.
 
 Contract reproduced:
 - header row gives column names; first header cell force-renamed to
@@ -11,6 +11,16 @@ Contract reproduced:
 - cells: '' / ND* / 'No Collateral' -> NULL, else lower().strip() (F11)
 - lineage filename/ed_code/pcd from the file path (F13)
 - all columns StringType at bronze (stringly-typed by design)
+
+Plan shape. The cells are cleaned in one SQL-text projection
+(normalize.normalize_cells) and a one-column blank mark is computed over
+the cleaned cells, both BELOW the label-row window; the one filter above
+the window reads only the row number and that mark. Filtering on the
+cleaned cells themselves above the window let Catalyst inline a predicate
+over all 127 raw cells into the filter, and constraint propagation then
+carried it through every node of each plan built on this frame (the
+SCD2 merge re-derived it per node: seconds of optimizer time per plan at
+the reference width).
 
 File discovery (S1: list bucket, filter by key, exclude 'Labeled' assets
 files) maps to glob + driver-side name filtering in list_csv_files.
@@ -24,7 +34,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..operators.normalize import lineage_from_filename, normalize_cells
+from ..operators.normalize import ident, lineage_from_filename, normalize_cells
 from ..schemas import INITIAL_COL
 
 
@@ -77,15 +87,15 @@ def read_edw_csv(
         df = df.withColumnRenamed(first, target)
     data_cols = [c for c in df.columns if c != "_corrupt_record"]
 
-    df = lineage_from_filename(df)
+    df = normalize_cells(lineage_from_filename(df), data_cols)
+    # blank line: every data cell null after cleaning — marked here, below
+    # the window, as one column the filter above it reads
+    df = df.selectExpr("*", f"coalesce({', '.join(map(ident, data_cols))}) IS NULL AS _blank")
     # drop the per-file label row (reference skips physical row 2,
-    # bronze_funcs.py:91-92)
+    # bronze_funcs.py:91-92) and the blank lines, in one filter
     w = W.partitionBy("filename").orderBy(F.monotonically_increasing_id())
-    df = df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") > 1).drop("_rn")
-
-    df = normalize_cells(df, data_cols)
-    # skip blank lines: all data cells null after normalization
-    not_blank = F.greatest(
-        *[F.col(c).isNotNull().cast("int") for c in data_cols]
-    ) == 1
-    return df.where(not_blank)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where("_rn > 1 AND NOT _blank")
+        .drop("_rn", "_blank")
+    )

@@ -18,7 +18,7 @@ from les_etl_pipeline_spark.sources.xml_ingest import (
     read_deal_details,
 )
 
-from .fixtures import DEFAULT_ASSET_ROWS, write_asset_csv, write_deal_xml
+from .fixtures import ASSET_HEADER, DEFAULT_ASSET_ROWS, write_asset_csv, write_deal_xml
 
 
 @pytest.fixture()
@@ -146,6 +146,31 @@ def test_transliteration_udf(spark):
     )
     out = [r["t"] for r in df.select(transliterate_ascii("s").alias("t")).collect()]
     assert out == ["cafe munchen", "tested", None, "plain"]
+
+
+def test_null_marker_row_is_blank_and_label_row_is_row_two(spark, tmp_path):
+    """A data row whose every cell is a null marker (ND codes, blanks, 'No
+    Collateral') is dropped as a blank line, and the label row is dropped
+    by position (physical row 2) even when it is itself all null markers
+    and so blank too: blank lines must not be removed before the label
+    row is counted."""
+    d = tmp_path / "rawblank"
+    d.mkdir()
+    markers = ["ND1", "", " No Collateral ", "ND", "  ", "ND7", "", "", "No Collateral"]
+    write_asset_csv(str(d), "LESIT05", (2023, 6, 30), [
+        DEFAULT_ASSET_ROWS[0], markers, DEFAULT_ASSET_ROWS[1],
+    ])
+    path = os.path.join(str(d), "LESIT06_2023_06_30_assets.csv")
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(",".join(ASSET_HEADER) + "\n")
+        f.write(",".join(markers) + "\n")  # the label row, blank
+        f.write(",".join(DEFAULT_ASSET_ROWS[0]) + "\n")
+        f.write(",".join(markers) + "\n")
+    got = sorted(
+        (r["ed_code"], r["AL5"])
+        for r in read_edw_csv(spark, list_csv_files(str(d)), "assets").collect()
+    )
+    assert got == [("LESIT05", "ls-1"), ("LESIT05", "ls-2"), ("LESIT06", "ls-1")]
 
 
 def test_permissive_malformed_rows(spark, tmp_path):

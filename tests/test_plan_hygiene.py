@@ -11,6 +11,7 @@ a new query that accidentally plans one fails CI with its name.
 
 from __future__ import annotations
 
+import math
 import re
 
 import pytest
@@ -367,3 +368,98 @@ def test_job_budgets(spark, sf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert not offenders, f"driver job budgets exceeded: {offenders}"
+
+
+# --------------------------------------------------------------------------
+# EDW stages at the 127-column reference width: driver-side plan cost
+# --------------------------------------------------------------------------
+def _and_depth(e) -> int:
+    """Height of the AND tree at the root of a Catalyst expression."""
+    if e.getClass().getSimpleName() != "And":
+        return 0
+    return 1 + max(_and_depth(e.left()), _and_depth(e.right()))
+
+
+def _and_leaves(e) -> int:
+    if e.getClass().getSimpleName() != "And":
+        return 1
+    return _and_leaves(e.left()) + _and_leaves(e.right())
+
+
+def test_validation_flag_is_a_balanced_and_tree(spark):
+    """compile_rules' flag over every ASSET_RULES check is a balanced AND
+    tree: a NOT over a left-deep chain took the optimizer one
+    BooleanSimplification pass per check and hit its iteration cap."""
+    from pyspark.sql import types as T
+
+    from les_etl_pipeline_spark import schemas
+    from les_etl_pipeline_spark.operators.validation import compile_rules
+
+    flag, _ = compile_rules(schemas.ASSET_RULES, strict_columns=False)
+    df = spark.createDataFrame(
+        [], T.StructType([T.StructField(c, T.StringType()) for c in schemas.ASSET_RULES])
+    )
+    e = df.select(flag.alias("flag"))._jdf.queryExecution().analyzed().projectList().head()
+    e = e.child()
+    checks = _and_leaves(e)
+    assert checks > len(schemas.ASSET_RULES)
+    assert _and_depth(e) <= math.ceil(math.log2(checks)) + 2, (checks, _and_depth(e))
+
+
+@pytest.fixture(scope="module")
+def wide_csv(tmp_path_factory):
+    """One full-width assets file: every ASSET_COLUMNS header, a label row
+    and three data rows."""
+    from les_etl_pipeline_spark import schemas
+
+    cols = sorted(schemas.ASSET_COLUMNS, key=lambda c: int(c[2:]))
+    path = tmp_path_factory.mktemp("wide") / "LESW01_2023_06_30_assets.csv"
+    lines = [",".join(cols), ",".join(f"label {c}" for c in cols)]
+    lines += [",".join(f"v{i}" for _ in cols) for i in range(3)]
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
+
+
+def test_read_edw_csv_filters_only_above_the_window(spark, wide_csv):
+    """The optimized read plan has no Filter below the label-row Window,
+    and the one Filter above it reads only the row number and the blank
+    mark — not an inlined predicate over every raw cell, which constraint
+    propagation would carry through every plan built on the read."""
+    from les_etl_pipeline_spark.sources.csv_ingest import read_edw_csv
+
+    df = read_edw_csv(spark, [wide_csv], "assets")
+    lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    win = [i for i, line in enumerate(lines) if "row_number()" in line]
+    assert len(win) == 1, lines
+    assert not [line for line in lines[win[0]:] if "Filter " in line]
+    above = [line for line in lines[: win[0]] if "Filter " in line]
+    assert len(above) == 1, above
+    refs = set(re.findall(r"([A-Za-z_]\w*)#\d+", above[0]))
+    assert refs == {"_rn", "_blank"}, above[0]
+
+
+def test_wide_edw_build_py4j_budget(spark, wide_csv, monkeypatch):
+    """Building read_edw_csv + cast_to_datatype + scd2_stamp at full width
+    stays within 1,000 py4j commands: each wide projection is parsed SQL
+    text, one command per column, where the Column-API builders sent one
+    per expression node (about 31k for the three)."""
+    import py4j.java_gateway as jg
+
+    from les_etl_pipeline_spark import schemas
+    from les_etl_pipeline_spark.operators.cast_engine import cast_to_datatype
+    from les_etl_pipeline_spark.operators.normalize import scd2_stamp
+    from les_etl_pipeline_spark.sources.csv_ingest import read_edw_csv
+
+    sent = [0]
+    send = jg.GatewayClient.send_command
+
+    def counted(self, *args, **kwargs):
+        sent[0] += 1
+        return send(self, *args, **kwargs)
+
+    monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
+    df = read_edw_csv(spark, [wide_csv], "assets")
+    cast_to_datatype(df, schemas.ASSET_COLUMNS)
+    scd2_stamp(df, sorted(c for c in df.columns if c != "filename"))
+    monkeypatch.undo()
+    assert 0 < sent[0] <= 1000, sent[0]

@@ -4,7 +4,11 @@ sf0.001 (the driver repeats this at sf0.01)."""
 
 from __future__ import annotations
 
+import glob
+import json
 import math
+import os
+import re
 
 import pytest
 
@@ -143,6 +147,22 @@ def test_oracle_sql_rounding_hygiene():
         assert not re.search(r"(?<![_a-zA-Z])(random|now|current_date|current_timestamp)\s*\(", sql), (
             f"{name}: nondeterministic function in oracle"
         )
+
+
+def test_newest_strict_sweep_is_registry_wide_and_exact():
+    """The newest committed STRICT_r*.json (tools/strict_check.py --all
+    --json, one per round) swept every oracle-paired query bit-exact."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = glob.glob(os.path.join(root, "STRICT_r*.json"))
+    assert paths, "no STRICT_r*.json committed"
+    newest = max(paths, key=lambda p: int(re.search(r"STRICT_r(\d+)\.json$", p).group(1)))
+    with open(newest) as f:
+        sweep = json.load(f)
+    name = os.path.basename(newest)
+    assert sweep["registry_wide"], name
+    missing = sorted(set(ORACLES) - set(sweep["queries"]))
+    assert not missing, f"{name} misses {missing}"
+    assert sweep["n_fails"] == 0, name
 
 
 def test_scheduler_is_lru_and_rotation_bound_holds():
