@@ -108,6 +108,13 @@ def part_key() -> Column:
     return F.concat(F.col("ed_code"), F.lit("_"), F.regexp_replace("pcd", "-", ""))
 
 
+def part_name(ed_code: str, pcd: str) -> str:
+    """part_key's value for one (ed_code, pcd), computed on the driver —
+    the bronze stage names the partitions a CSV batch touches from the
+    key_from_filename keys, with no scan."""
+    return f"{ed_code}_{pcd.replace('-', '')}"
+
+
 def scd2_stamp(df: DataFrame, primary_cols: list[str]) -> DataFrame:
     """F1-F6 initial-load SCD2 stamping (bronze_funcs.py:129-140)."""
     return df.withColumns(

@@ -8,29 +8,41 @@ Each stage is one read -> transform -> write over parquet:
 - bronze: all deals/files as ONE partitioned DataFrame job (not a driver
   loop over files with per-file createDataFrame) -> SCD2 stamp -> merge
   with the existing table (operators/scd2.py; the reference's
-  perform_scd2 was dead) -> partitioned write. The run ledger is read
+  perform_scd2 was dead) -> partitioned write. Only the batch's
+  partitions are read, merged and rewritten: `part` is a function of
+  (ed_code, pcd), both in every merge key, so an incoming row can only
+  match old rows of its own partition, and dynamic partition overwrite
+  leaves every other partition's files alone. The run ledger is read
   once to skip done files and appended once per batch, both keyed on
   the file names, so it never re-scans the input.
 - silver: current snapshot -> validation flags, persisted once -> ONE
-  aggregate for the QC counters (it also fills the cache) -> quarantine
-  write if any row is bad -> cast + topic writes if any row is good. The
-  reference recomputed its Python validation pass per consumer and
-  probed the bad frame for emptiness before writing; here every consumer
-  reads the one validated frame and the counts replace the probe.
+  aggregate for the QC counters (it also fills the cache) -> the
+  qc_metrics row, the quarantine (if any row is bad) and the cast topic
+  tables (if any row is good), written concurrently. The reference
+  recomputed its Python validation pass per consumer and probed the bad
+  frame for emptiness before writing; here every consumer reads the one
+  validated frame and the counts replace the probe.
+- driver-side rows (ledger, QC counters, deal XML) are LocalRelations
+  (functions.literal_df.local_df): no stage forks a Python worker
 - writes fail loudly (no retry-swallow)
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
+from pyspark.util import inheritable_thread_target
 
 from . import schemas
+from .functions.literal_df import local_df
 from .operators import scd2 as scd2_ops
 from .operators.cast_engine import cast_to_datatype
-from .operators.normalize import key_from_filename, scd2_stamp
+from .operators.normalize import key_from_filename, part_key, part_name, scd2_stamp
 from .operators.validation import profile_data, split_flagged
 from .operators.vertical import range_columns, topic_tables
 from .sinks.writers import RunLedger, write_partitioned, write_quarantine
@@ -39,14 +51,23 @@ from .sources.xml_ingest import read_deal_details
 
 
 def _stamp_merge_write(
-    spark: SparkSession, df: DataFrame, payload: list[str], out_path: str, data_type: str
+    spark: SparkSession,
+    df: DataFrame,
+    payload: list[str],
+    out_path: str,
+    data_type: str,
+    parts: set[str | None],
 ) -> DataFrame:
     """SCD2-stamp ``df`` with a checksum over ``payload`` (change
-    detection), merge it into the bronze table at ``out_path`` if one
-    exists (keyed on schemas.MERGE_KEYS — see note there), and write."""
+    detection), merge it into the batch's partitions ``parts`` of the
+    bronze table at ``out_path`` if one exists (keyed on
+    schemas.MERGE_KEYS — see note there), and write those partitions."""
     stamped = scd2_stamp(df, payload)
     if os.path.exists(out_path):
-        old = spark.read.parquet(out_path)
+        in_batch = F.col("part").isin(*sorted(p for p in parts if p is not None))
+        if None in parts:
+            in_batch = in_batch | F.col("part").isNull()
+        old = spark.read.parquet(out_path).where(in_batch)  # partition-pruned scan
         stamped = scd2_ops.scd2_merge(old, stamped.select(*old.columns),
                                       schemas.MERGE_KEYS[data_type])
     write_partitioned(stamped, out_path)
@@ -71,10 +92,11 @@ def bronze_csv(
     ledger: RunLedger | None = None,
 ) -> DataFrame | None:
     """Bronze load for assets/bond_info: discover -> distributed read ->
-    normalize -> SCD2 stamp -> merge with existing -> partitioned write."""
-    paths = list_csv_files(raw_prefix, file_key, data_type)
+    normalize -> SCD2 stamp -> merge with the batch's partitions of the
+    existing table -> partitioned write of those partitions."""
+    keys = {p: key_from_filename(p) for p in list_csv_files(raw_prefix, file_key, data_type)}
     tracked = ledger is not None and bool(ingestion_date)
-    if paths and tracked:
+    if keys and tracked:
         # S3/O4 idempotence guard: skip files whose (ed_code, pcd) already
         # ran this date — keying on ed_code alone would wrongly skip a
         # later file for the same deal with a new pool-cutoff date
@@ -84,15 +106,16 @@ def bronze_csv(
             .where(F.col("ingestion_date") == ingestion_date)
             .collect()
         }
-        paths = [p for p in paths if key_from_filename(p) not in done]
-    if not paths:
+        keys = {p: k for p, k in keys.items() if k not in done}
+    if not keys:
         return None
-    df = read_edw_csv(spark, paths, data_type)
+    df = read_edw_csv(spark, list(keys), data_type)
     stamped = _stamp_merge_write(
-        spark, df, sorted(c for c in df.columns if c != "filename"), out_path, data_type
+        spark, df, sorted(c for c in df.columns if c != "filename"), out_path, data_type,
+        {part_name(*k) for k in keys.values()},
     )
     if tracked:
-        ledger.record(data_type, ingestion_date, sorted({key_from_filename(p) for p in paths}))
+        ledger.record(data_type, ingestion_date, sorted(set(keys.values())))
     return stamped
 
 
@@ -102,7 +125,22 @@ def bronze_deal_details(
     """Bronze load for deal_details XML: parse -> stamp -> merge -> write
     (the path where the reference's perform_scd2 was dead, §2.9)."""
     df = read_deal_details(spark, xml_paths).withColumn("pcd", F.col("PoolCutOffDate"))
-    return _stamp_merge_write(spark, df, sorted(df.columns), out_path, "deal_details")
+    # a projection of a LocalRelation: collected on the driver, no job
+    parts = {r[0] for r in df.select(part_key()).collect()}
+    return _stamp_merge_write(spark, df, sorted(df.columns), out_path, "deal_details", parts)
+
+
+def _write_all(spark: SparkSession, writes: list[Callable[[], None]]) -> None:
+    """Run independent writes concurrently, one thread each; every thread
+    inherits the caller's job group and tags. Waits for all of them, then
+    re-raises the first failure."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for f in futures:
+        f.result()
+
+
+_QC_SCHEMA = "data_type string, n_rows long, n_bad long, n_good long"
 
 
 def _silver(
@@ -125,26 +163,25 @@ def _silver(
         # the cache the writes below read
         n_rows, n_bad = flagged.agg(F.count(F.lit(1)), F.count_if(~F.col("flag"))).first()
         n_good = n_rows - n_bad
-        spark.createDataFrame(
-            [(data_type, n_rows, n_bad, n_good)],
-            "data_type string, n_rows long, n_bad long, n_good long",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "qc_metrics", data_type)
-        )
+        qc = local_df(spark, [(data_type, n_rows, n_bad, n_good)], _QC_SCHEMA)
+        writes = [partial(qc.write.mode("overwrite").parquet,
+                          os.path.join(out_dir, "qc_metrics", data_type))]
         good, bad = split_flagged(flagged)
         if n_bad:
-            write_quarantine(bad, os.path.join(out_dir, "dirty_dumps", data_type))
-        if not n_good:
-            return {}
-        typed = cast_to_datatype(good, cast_map)
-        topics = {
-            name: range_columns(prefix, lo, hi, typed.columns)
-            for name, (prefix, lo, hi) in ranges.items()
-        }
-        present_primary = [c for c in primary if c in typed.columns]
-        out = topic_tables(typed, present_primary, topics)
-        for name, tdf in out.items():
-            write_partitioned(tdf, os.path.join(out_dir, data_type, name))
+            writes.append(partial(write_quarantine, bad,
+                                  os.path.join(out_dir, "dirty_dumps", data_type)))
+        out = {}
+        if n_good:
+            typed = cast_to_datatype(good, cast_map)
+            topics = {
+                name: range_columns(prefix, lo, hi, typed.columns)
+                for name, (prefix, lo, hi) in ranges.items()
+            }
+            present_primary = [c for c in primary if c in typed.columns]
+            out = topic_tables(typed, present_primary, topics)
+            writes += [partial(write_partitioned, tdf, os.path.join(out_dir, data_type, name))
+                       for name, tdf in out.items()]
+        _write_all(spark, writes)
         return out
     finally:
         flagged.unpersist()

@@ -10,11 +10,15 @@ The reference wrapped every write in a retry-5-swallow-errors loop
 (generate_bronze_tables.py:76-90 — SURVEY.md §4.2 flags it): here writes
 fail loudly and rely on Spark task retries. No writer runs a probe action
 of its own: the silver stage decides whether to write the quarantine from
-the counts of its one QC aggregate.
+the counts of its one QC aggregate. The writers are safe to call from
+several threads at once (the silver stage runs its writes concurrently);
+each one targets its own path.
 
 The run ledger (S3/K4/O4: clean_dump markers driving idempotence) becomes
 a small parquet table keyed by (data_type, ingestion_date, ed_code), one
-append per processed batch.
+append per processed batch. Its rows come from the driver as a
+LocalRelation (functions.literal_df.local_df), so neither the append nor
+the empty-ledger read forks a Python worker.
 """
 
 from __future__ import annotations
@@ -24,6 +28,8 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.literal_df import local_df
 
 #: caps the other small-file extreme: no output file exceeds this many rows
 MAX_RECORDS_PER_FILE = 5_000_000
@@ -71,10 +77,10 @@ class RunLedger:
         """Append one row per (ed_code, pcd) of a processed batch, in one
         write."""
         rows = [(data_type, ingestion_date, ed_code, pcd) for ed_code, pcd in keys]
-        df = self.spark.createDataFrame(rows, _LEDGER_SCHEMA)
+        df = local_df(self.spark, rows, _LEDGER_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.path)
 
     def entries(self, data_type: str) -> DataFrame:
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], _LEDGER_SCHEMA)
+            return local_df(self.spark, [], _LEDGER_SCHEMA)
         return self.spark.read.parquet(self.path).where(F.col("data_type") == data_type)

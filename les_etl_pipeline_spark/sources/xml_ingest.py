@@ -26,6 +26,8 @@ import xml.etree.ElementTree as ET
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.literal_df import local_df
+
 _DROP_DEAL = {"Country", "DealVisibleToOrg", "DealVisibleToUser", "Submissions", "ISIN"}
 _DROP_SUBMISSION = {"MetricData", "IsProvisional", "IsRestructured"}
 
@@ -81,14 +83,18 @@ def parse_deal_xml(path: str) -> dict[str, str | None]:
 
 
 def read_deal_details(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """One row per XML file, all columns StringType (bronze contract)."""
+    """One row per XML file, all columns StringType (bronze contract).
+
+    The parsed rows become a LocalRelation (local_df): no Python worker
+    runs, and projections and collects over the frame (the bronze stage
+    reads its partition keys back) are answered on the driver."""
     if isinstance(paths, str):
         paths = [paths]
     rows = [parse_deal_xml(p) for p in paths]
     cols = sorted({k for r in rows for k in r})
     data = [tuple(r.get(c) for c in cols) for r in rows]
     schema = ", ".join(f"`{c}` string" for c in cols)
-    return spark.createDataFrame(data, schema)
+    return local_df(spark, data, schema)
 
 
 def expose_isin_array(df: DataFrame) -> DataFrame:

@@ -332,3 +332,241 @@ def test_silver_qc_counts_exact_across_partitions(spark, tmp_path):
     qc = spark.read.parquet(os.path.join(out, "qc_metrics", "assets")).collect()[0]
     assert (qc["n_rows"], qc["n_bad"], qc["n_good"]) == (n_rows, n_bad, n_rows - n_bad)
     assert spark.read.parquet(os.path.join(out, "dirty_dumps", "assets")).count() == n_bad
+
+
+def _new_executions(spark, since_id: int) -> list:
+    """The SQL executions in the status store with an id above ``since_id``
+    (walked from the newest, so evicted old entries do not matter)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(0, n)
+    out = []
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= since_id:
+            break
+        out.append(e)
+    return out
+
+
+def _last_execution_id(spark) -> int:
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def test_edw_path_forks_no_python_worker(spark, raw_dir, tmp_path):
+    """Ledger read and append, deal-details XML, QC row: every driver-row
+    frame is a LocalRelation, so no execution scans a pickled RDD (whose
+    tasks would fork Python workers)."""
+    since = _last_execution_id(spark)
+    bronze = str(tmp_path / "bronze")
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    pipelines.bronze_csv(spark, raw_dir, bronze, "assets",
+                         ingestion_date="2023-08-01", ledger=ledger)
+    xml = write_deal_xml(str(tmp_path), "LESIT01")
+    pipelines.bronze_deal_details(spark, [xml], str(tmp_path / "bronze_dd"))
+    pipelines.silver_assets(spark, bronze, str(tmp_path / "silver"))
+    plans = [e.physicalPlanDescription() for e in _new_executions(spark, since)]
+    assert len(plans) >= 5
+    assert [p for p in plans if "ExistingRDD" in p] == []
+
+
+def test_edw_modules_build_no_frame_from_a_python_list():
+    """Source scan: the EDW write path builds driver rows with local_df
+    only."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(pipelines.__file__).parent
+    files = [pkg / "pipelines.py", pkg / "sources" / "xml_ingest.py",
+             *sorted((pkg / "sinks").glob("*.py"))]
+    calls = [
+        (f.name, node.lineno)
+        for f in files
+        for node in ast.walk(ast.parse(f.read_text()))
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "createDataFrame"
+    ]
+    assert calls == []
+
+
+def _deal_rows(deal: int, n: int, changed: frozenset = frozenset()) -> list[list[str]]:
+    base = DEFAULT_ASSET_ROWS[0]
+    return [[*base[:3], f"LS-{deal}-{j}", *base[4:7], f"{j + (100 if j in changed else 0)}.25",
+             base[8]] for j in range(n)]
+
+
+def _part_files(path: str) -> dict[str, list[tuple[str, int]]]:
+    return {
+        part: sorted((f, os.stat(os.path.join(path, part, f)).st_mtime_ns)
+                     for f in os.listdir(os.path.join(path, part)))
+        for part in os.listdir(path) if part.startswith("part=")
+    }
+
+
+def test_pruned_merge_rewrites_only_the_batch_partitions(spark, tmp_path):
+    """A day-2 batch touching 1 of 3 deals leaves the other deals' parquet
+    files as they were (same names, same mtimes), and the table's rows
+    equal the full-table merge's on every column but the merge
+    timestamps."""
+    import shutil
+
+    from les_etl_pipeline_spark.operators.normalize import scd2_stamp
+    from les_etl_pipeline_spark.operators.scd2 import scd2_merge
+    from les_etl_pipeline_spark.sinks.writers import write_partitioned
+
+    day1, day2 = tmp_path / "day1", tmp_path / "day2"
+    day1.mkdir()
+    day2.mkdir()
+    for d in (1, 2, 3):
+        write_asset_csv(str(day1), f"LESIT0{d}", (2023, 6, 30), _deal_rows(d, 6))
+    # deal 2 again: rows 1 and 4 changed, one new row, the rest unchanged
+    write_asset_csv(str(day2), "LESIT02", (2023, 6, 30),
+                    _deal_rows(2, 7, changed=frozenset({1, 4})))
+    pruned, full = str(tmp_path / "pruned"), str(tmp_path / "full")
+    pipelines.bronze_csv(spark, str(day1), pruned, "assets")
+    shutil.copytree(pruned, full)
+    before = _part_files(pruned)
+    assert len(before) == 3
+
+    pipelines.bronze_csv(spark, str(day2), pruned, "assets")
+    after = _part_files(pruned)
+    touched = "part=LESIT02_20230630"
+    assert {k: v for k, v in after.items() if k != touched} == {
+        k: v for k, v in before.items() if k != touched}
+    assert after[touched] != before[touched]
+
+    # the full-table merge: read every partition, merge, rewrite them all
+    df = read_edw_csv(spark, list_csv_files(str(day2)), "assets")
+    stamped = scd2_stamp(df, sorted(c for c in df.columns if c != "filename"))
+    old = spark.read.parquet(full)
+    write_partitioned(
+        scd2_merge(old, stamped.select(*old.columns), schemas.MERGE_KEYS["assets"]), full)
+
+    def rows(path):
+        t = spark.read.parquet(path).drop("valid_from", "valid_to")
+        return sorted(tuple(r) for r in t.select(*sorted(t.columns)).collect())
+
+    got = rows(pruned)
+    assert got == rows(full)
+    assert len(got) == 3 * 6 + 2 + 1  # two closed-out versions, one new row
+
+
+def test_pruned_merge_keeps_history_of_a_null_part(spark, tmp_path):
+    """A deal XML without a pool cutoff date has a NULL part (Hive's
+    default partition): the pruned merge still reads its old rows, so a
+    changed re-submission closes the old version out instead of
+    replacing it."""
+    out = str(tmp_path / "bronze_dd")
+    for size in ("500000000.00", "600000000.00"):
+        d = tmp_path / size
+        d.mkdir()
+        p = write_deal_xml(str(d), "LESIT09", pcd="")
+        with open(p, encoding="utf-8") as f:
+            xml = f.read().replace("500000000.00", size)
+        with open(p, "w", encoding="utf-8") as f:
+            f.write(xml)
+        pipelines.bronze_deal_details(spark, [p], out)
+    got = sorted((r["DealSize"], r["iscurrent"], r["part"])
+                 for r in spark.read.parquet(out).collect())
+    assert got == [("500000000.00", 0, None), ("600000000.00", 1, None)]
+
+
+def test_part_name_matches_part_key_over_file_names(spark, tmp_path):
+    """The partition names the bronze stage derives on the driver equal
+    the part column Spark computes from the scanned file names."""
+    from les_etl_pipeline_spark.operators.normalize import (
+        key_from_filename,
+        part_key,
+        part_name,
+    )
+
+    names = [
+        "LESIT01_2023_06_30_assets.csv",
+        "LES-IT2_1999_12_01_assets.csv",
+        "LESIT03_2023_6_30_assets.csv",  # no YYYY_MM_DD: empty pcd parts
+        "nodate_assets.csv",
+        "Ünï.x_2024_02_29_assets.csv",
+    ]
+    raw = tmp_path / "names"
+    raw.mkdir()
+    paths = []
+    for name in names:
+        p = write_asset_csv(str(raw), "TMP", (2000, 1, 1), DEFAULT_ASSET_ROWS[:1])
+        os.rename(p, str(raw / name))
+        paths.append(str(raw / name))
+    got = {
+        r["filename"]: r["part"]
+        for r in read_edw_csv(spark, paths, "assets")
+        .select("filename", part_key().alias("part")).collect()
+    }
+    assert got == {os.path.basename(p): part_name(*key_from_filename(p)) for p in paths}
+
+
+@pytest.fixture()
+def wide_bronze(spark, tmp_path):
+    """A one-deal full-width assets bronze: silver writes all six topics."""
+    from .fixtures import write_wide_asset_csv
+
+    raw = tmp_path / "rawwide"
+    raw.mkdir()
+    write_wide_asset_csv(str(raw), "LESIT77", (2023, 6, 30))
+    bronze = str(tmp_path / "bronze")
+    pipelines.bronze_csv(spark, str(raw), bronze, "assets")
+    return bronze
+
+
+def test_silver_write_failure_waits_for_the_other_writes(
+    spark, wide_bronze, tmp_path, monkeypatch
+):
+    """A failing topic write makes silver raise only after every other
+    write has finished, and the flagged frame is unpersisted."""
+    from pyspark.storagelevel import StorageLevel
+
+    out = str(tmp_path / "silver")
+    flagged = []
+    real_profile, real_write = pipelines.profile_data, pipelines.write_partitioned
+
+    def profile(*args, **kwargs):
+        flagged.append(real_profile(*args, **kwargs))
+        return flagged[-1]
+
+    finished = []
+
+    def write(df, path):
+        if path.endswith("lease_info"):
+            raise RuntimeError("lease_info write failed")
+        real_write(df, path)
+        finished.append(os.path.basename(path))
+
+    monkeypatch.setattr(pipelines, "profile_data", profile)
+    monkeypatch.setattr(pipelines, "write_partitioned", write)
+    with pytest.raises(RuntimeError, match="lease_info write failed"):
+        pipelines.silver_assets(spark, wide_bronze, out)
+    assert sorted(finished) == sorted(set(schemas.ASSET_TOPIC_RANGES) - {"lease_info"})
+    assert os.path.isdir(os.path.join(out, "qc_metrics", "assets"))
+    assert flagged[0].storageLevel == StorageLevel.NONE
+
+
+def test_silver_jobs_inherit_the_callers_job_group(spark, wide_bronze, tmp_path):
+    """The concurrent writes run in the caller's job group: every job
+    between two marker jobs belongs to group g."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        spark.range(10).selectExpr("sum(id)").collect()
+        return tracker.getJobIdsForGroup(group)
+
+    try:
+        lo = max(marker("silver-before"))
+        sc.setJobGroup("g", "silver under a caller's group")
+        pipelines.silver_assets(spark, wide_bronze, str(tmp_path / "silver"))
+        hi = min(marker("silver-after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    in_group = set(tracker.getJobIdsForGroup("g"))
+    assert len(in_group) >= 8  # QC aggregate + qc_metrics + 6 topic writes
+    assert in_group == set(range(lo + 1, hi))
