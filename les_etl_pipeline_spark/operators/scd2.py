@@ -14,9 +14,14 @@ and implements the missing semantics (SURVEY.md §7.4(1)):
 - re-run idempotence: applying the same batch twice is a no-op (equal
   checksums -> no close-out, no insert)
 
-Implementation is a pure DataFrame transform (one shuffle on the
-business key): the bronze stage reads the old parquet table, merges, and
-overwrites the touched partitions with the result.
+Implementation is one full outer join, the write-pass shape of Delta's
+MERGE (Armbrust et al., "Delta Lake", VLDB 2020): the deduped batch joins
+the old table on ``old.iscurrent = 1`` plus a null-safe match on every
+key column, and each joined row emits its kept, closed-out and inserted
+rows through one ``inline(filter(array(...)))``. Each input is scanned
+once; history rows never match, so they cross the join shuffle once
+instead of being scanned apart. The bronze stage merges the batch's
+partitions of the old table and overwrites them with the result.
 """
 
 from __future__ import annotations
@@ -28,19 +33,15 @@ from pyspark.sql.window import Window
 from .normalize import ident
 
 
-def _key(primary_cols: list[str]) -> list[str]:
-    return ["ed_code", "pcd", *primary_cols]
-
-
 def _one_row_per_key(new: DataFrame, key: list[str]) -> DataFrame:
     """Collapse an incoming batch to one row per merge key.
 
     A repeated key in one batch (a row duplicated inside an EDW file —
     present in the reference's data, handled there by the silver layer's
     dropDuplicates) would otherwise fan out the merge join: the same
-    current row lands in both `keep` and `closed`, and multiple
-    iscurrent=1 versions get inserted for one key. Deterministic winner:
-    highest checksum (arbitrary but stable across runs/engines).
+    current row would be both kept and closed out, and multiple
+    iscurrent=1 versions would be inserted for one key. Deterministic
+    winner: highest checksum (arbitrary but stable across runs/engines).
     """
     w = Window.partitionBy(*key).orderBy(F.col("checksum").desc_nulls_last())
     return (
@@ -59,48 +60,28 @@ def scd2_merge(
     iscurrent, checksum) from normalize.scd2_stamp. Returns the full new
     state of the table (history rows + closed-out rows + current rows).
     """
-    key = _key(primary_cols)
-    # old's columns as SQL text: one py4j command per name per projection
-    cols = [ident(c) for c in old.columns]
+    key = ["ed_code", "pcd", *primary_cols]
+    incoming = _one_row_per_key(new.selectExpr(*[ident(c) for c in old.columns]), key)
+    on = " AND ".join(["o.iscurrent = 1", *[f"o.{ident(k)} <=> n.{ident(k)}" for k in key]])
+    joined = old.alias("o").join(incoming.alias("n"), F.expr(on), "full_outer")
 
-    history = old.where(F.col("iscurrent") == 0)
-    current = old.where(F.col("iscurrent") == 1)
+    def row(side: str, **override: str) -> str:
+        return "struct({})".format(", ".join(
+            f"{override[c]} AS {ident(c)}" if c in override else f"{side}.{ident(c)}"
+            for c in old.columns))
 
-    incoming = _one_row_per_key(new.selectExpr(*cols), key)  # align + dedupe
-    inc_keyed = incoming.selectExpr(
-        *[f"{ident(c)} AS {ident('_n_' + c)}" for c in incoming.columns]
-    )
-    join_cond = [F.col(k).eqNullSafe(F.col(f"_n_{k}")) for k in key]
-
-    matched = current.join(inc_keyed, join_cond, "left")
-
-    # unchanged current rows (no incoming row, or same checksum): keep as-is
-    keep = matched.where(
-        F.col("_n_checksum").isNull() | (F.col("_n_checksum") == F.col("checksum"))
-    ).selectExpr(*cols)
-
-    # changed rows: close out the old version
-    closed = (
-        matched.where(
-            F.col("_n_checksum").isNotNull() & (F.col("_n_checksum") != F.col("checksum"))
-        )
-        .selectExpr(*cols)
-        .withColumn("valid_to", F.current_timestamp())
-        .withColumn("iscurrent", F.lit(0))
-    )
-
-    # incoming rows that are genuinely new or changed become current rows
-    cur_keyed = current.selectExpr(
-        *[f"{ident(c)} AS {ident('_o_' + c)}" for c in [*key, "checksum"]]
-    )
-    inc_join = [F.col(k).eqNullSafe(F.col(f"_o_{k}")) for k in key]
-    inserts = (
-        incoming.join(cur_keyed, inc_join, "left")
-        .where(F.col("_o_checksum").isNull() | (F.col("_o_checksum") != F.col("checksum")))
-        .selectExpr(*cols)
-    )
-
-    return history.unionByName(keep).unionByName(closed).unionByName(inserts)
+    # condition -> row emitted; a checksum is never null (md5), so a null
+    # one marks the side a joined row lacks
+    emit = {
+        # keep: a history row, an untouched current row or an unchanged one
+        "o.checksum IS NOT NULL AND (n.checksum IS NULL OR n.checksum = o.checksum)": row("o"),
+        # close out a changed current row
+        "n.checksum != o.checksum": row("o", valid_to="current_timestamp()", iscurrent="0"),
+        # insert a new or changed row as the current version
+        "n.checksum IS NOT NULL AND NOT (o.checksum <=> n.checksum)": row("n"),
+    }
+    rows = ", ".join(f"IF({cond}, {r}, NULL)" for cond, r in emit.items())
+    return joined.selectExpr(f"inline(filter(array({rows}), r -> r IS NOT NULL))")
 
 
 def current_snapshot(df: DataFrame) -> DataFrame:

@@ -9,11 +9,11 @@ Each stage is one read -> transform -> write over parquet:
   loop over files with per-file createDataFrame) -> SCD2 stamp -> merge
   with the existing table (operators/scd2.py; the reference's
   perform_scd2 was dead) -> partitioned write. Only the batch's
-  partitions are read, merged and rewritten: `part` is a function of
+  partitions are listed, merged and rewritten: `part` is a function of
   (ed_code, pcd), both in every merge key, so an incoming row can only
   match old rows of its own partition, and dynamic partition overwrite
   leaves every other partition's files alone. The run ledger is read
-  once to skip done files and appended once per batch, both keyed on
+  once to skip done files and gains one dir per batch, both keyed on
   the file names, so it never re-scans the input.
 - silver: current snapshot -> validation flags, persisted once -> ONE
   aggregate for the QC counters (it also fills the cache) -> the
@@ -50,6 +50,17 @@ from .sources.csv_ingest import list_csv_files, read_edw_csv
 from .sources.xml_ingest import read_deal_details
 
 
+def _read_parts(spark: SparkSession, table: str, parts: set[str | None]) -> DataFrame | None:
+    """The partitions ``parts`` of the bronze table at ``table`` that
+    exist, or None. Only their directories (named as Spark's writer names
+    them) are listed, so a concurrent load of other deals, replacing other
+    partitions' directories, cannot fail this read."""
+    catalog = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    dirs = [os.path.join(table, catalog.getPartitionPathString("part", p)) for p in parts]
+    dirs = [d for d in dirs if os.path.isdir(d)]
+    return spark.read.option("basePath", table).parquet(*dirs) if dirs else None
+
+
 def _stamp_merge_write(
     spark: SparkSession,
     df: DataFrame,
@@ -57,21 +68,19 @@ def _stamp_merge_write(
     out_path: str,
     data_type: str,
     parts: set[str | None],
-) -> DataFrame:
+) -> DataFrame | None:
     """SCD2-stamp ``df`` with a checksum over ``payload`` (change
     detection), merge it into the batch's partitions ``parts`` of the
-    bronze table at ``out_path`` if one exists (keyed on
-    schemas.MERGE_KEYS — see note there), and write those partitions."""
+    bronze table at ``out_path`` if any of them exists (keyed on
+    schemas.MERGE_KEYS — see note there), and write those partitions.
+    Returns them as written (None if the batch had no rows): the merged
+    plan would re-read files the overwrite replaced, and re-stamp."""
     stamped = scd2_stamp(df, payload)
-    if os.path.exists(out_path):
-        in_batch = F.col("part").isin(*sorted(p for p in parts if p is not None))
-        if None in parts:
-            in_batch = in_batch | F.col("part").isNull()
-        old = spark.read.parquet(out_path).where(in_batch)  # partition-pruned scan
-        stamped = scd2_ops.scd2_merge(old, stamped.select(*old.columns),
-                                      schemas.MERGE_KEYS[data_type])
+    old = _read_parts(spark, out_path, parts)
+    if old is not None:
+        stamped = scd2_ops.scd2_merge(old, stamped, schemas.MERGE_KEYS[data_type])
     write_partitioned(stamped, out_path)
-    return stamped
+    return _read_parts(spark, out_path, parts)
 
 
 def _current(spark: SparkSession, bronze_path: str, part: str | None) -> DataFrame:
@@ -110,18 +119,18 @@ def bronze_csv(
     if not keys:
         return None
     df = read_edw_csv(spark, list(keys), data_type)
-    stamped = _stamp_merge_write(
+    written = _stamp_merge_write(
         spark, df, sorted(c for c in df.columns if c != "filename"), out_path, data_type,
         {part_name(*k) for k in keys.values()},
     )
     if tracked:
         ledger.record(data_type, ingestion_date, sorted(set(keys.values())))
-    return stamped
+    return written
 
 
 def bronze_deal_details(
     spark: SparkSession, xml_paths: list[str], out_path: str
-) -> DataFrame:
+) -> DataFrame | None:
     """Bronze load for deal_details XML: parse -> stamp -> merge -> write
     (the path where the reference's perform_scd2 was dead, §2.9)."""
     df = read_deal_details(spark, xml_paths).withColumn("pcd", F.col("PoolCutOffDate"))

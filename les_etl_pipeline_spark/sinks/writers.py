@@ -16,20 +16,24 @@ each one targets its own path.
 
 The run ledger (S3/K4/O4: clean_dump markers driving idempotence) becomes
 a small parquet table keyed by (data_type, ingestion_date, ed_code), one
-append per processed batch. Its rows come from the driver as a
-LocalRelation (functions.literal_df.local_df), so neither the append nor
-the empty-ledger read forks a Python worker.
+``batch-<uuid>`` dir per processed batch published by
+sinks.atomic.publish_dir, so concurrent loads never share a committer's
+``_temporary`` dir. Its rows come from the driver as a LocalRelation
+(functions.literal_df.local_df): no ledger write or empty read forks a
+Python worker.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.literal_df import local_df
+from .atomic import publish_dir
 
 #: caps the other small-file extreme: no output file exceeds this many rows
 MAX_RECORDS_PER_FILE = 5_000_000
@@ -74,13 +78,15 @@ class RunLedger:
     def record(
         self, data_type: str, ingestion_date: str, keys: Iterable[tuple[str, str]]
     ) -> None:
-        """Append one row per (ed_code, pcd) of a processed batch, in one
-        write."""
+        """Publish one row per (ed_code, pcd) of a processed batch as the
+        ledger's new ``batch-<uuid>`` directory, in one write."""
         rows = [(data_type, ingestion_date, ed_code, pcd) for ed_code, pcd in keys]
         df = local_df(self.spark, rows, _LEDGER_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        publish_dir(df.coalesce(1), os.path.join(self.path, f"batch-{uuid.uuid4().hex}"))
 
     def entries(self, data_type: str) -> DataFrame:
         if not os.path.exists(self.path):
             return local_df(self.spark, [], _LEDGER_SCHEMA)
-        return self.spark.read.parquet(self.path).where(F.col("data_type") == data_type)
+        # schema given: a ledger holding only a load's staging dir reads empty
+        ledger = self.spark.read.schema(_LEDGER_SCHEMA).option("recursiveFileLookup", "true")
+        return ledger.parquet(self.path).where(F.col("data_type") == data_type)

@@ -24,9 +24,6 @@ ALLOWED = {
     ("streaming/windows.py", "stream_to_lakehouse.write_batch", "append"): (
         "foreachBatch landing sink: exactly-once via the checkpointed batch id"
     ),
-    ("sinks/writers.py", "RunLedger.record", "append"): (
-        "EDW run ledger: one append per batch on the single-writer pipeline"
-    ),
 }
 
 

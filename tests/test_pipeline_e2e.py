@@ -472,6 +472,88 @@ def test_pruned_merge_keeps_history_of_a_null_part(spark, tmp_path):
     assert got == [("500000000.00", 0, None), ("600000000.00", 1, None)]
 
 
+def test_bronze_returns_the_partitions_as_written(spark, tmp_path):
+    """The frame a bronze stage returns is the batch's partitions as
+    written: collecting it after a merge reads the files the overwrite
+    left (not the ones it deleted), and collecting it twice after a first
+    load gives the same valid_from."""
+    day1, day2 = tmp_path / "day1", tmp_path / "day2"
+    day1.mkdir()
+    day2.mkdir()
+    for d in (1, 2):
+        write_asset_csv(str(day1), f"LESIT0{d}", (2023, 6, 30), _deal_rows(d, 3))
+    write_asset_csv(str(day2), "LESIT02", (2023, 6, 30), _deal_rows(2, 3, frozenset({1})))
+    out = str(tmp_path / "bronze")
+
+    def table(part=None):
+        t = spark.read.parquet(out)
+        t = t if part is None else t.where(F.col("part") == part)
+        return sorted(tuple(r) for r in t.collect())
+
+    first = pipelines.bronze_csv(spark, str(day1), out, "assets")
+    assert sorted(tuple(r) for r in first.collect()) == table()
+    assert sorted(tuple(r) for r in first.collect()) == table()
+    merged = pipelines.bronze_csv(spark, str(day2), out, "assets")
+    got = sorted(tuple(r) for r in merged.collect())
+    assert got == table("LESIT02_20230630")
+    assert len(got) == 3 + 1  # one changed row: a closed version and a new one
+
+    xml = write_deal_xml(str(tmp_path), "LESIT09")
+    dd = str(tmp_path / "bronze_dd")
+    pipelines.bronze_deal_details(spark, [xml], dd)
+    with open(xml, encoding="utf-8") as f:
+        body = f.read().replace("500000000.00", "600000000.00")
+    with open(xml, "w", encoding="utf-8") as f:
+        f.write(body)
+    again = pipelines.bronze_deal_details(spark, [xml], dd)
+    assert sorted((r["DealSize"], r["iscurrent"]) for r in again.collect()) == [
+        ("500000000.00", 0), ("600000000.00", 1)]
+
+
+def test_concurrent_ledgered_loads_keep_every_ledger_row(spark, tmp_path):
+    """Chaos: four threads load four deals' day-2 files into one bronze
+    table with one ledger at once. Every load succeeds, the ledger holds
+    one row per deal and the table holds every deal's merge: each record
+    publishes its own ledger dir (appends into one dir shared a
+    committer's ``_temporary`` dir), and each merge lists only its own
+    deal's partition (not one another load is replacing)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    deals = (1, 2, 3, 4)
+    day1 = tmp_path / "day1"
+    day1.mkdir()
+    for d in deals:
+        write_asset_csv(str(day1), f"LESIT0{d}", (2023, 6, 30), _deal_rows(d, 4))
+    out = str(tmp_path / "bronze")
+    ledger = RunLedger(spark, str(tmp_path / "ledger"))
+    pipelines.bronze_csv(spark, str(day1), out, "assets",
+                         ingestion_date="2023-08-01", ledger=ledger)
+    raws = []
+    for d in deals:
+        raw = tmp_path / f"day2_{d}"
+        raw.mkdir()
+        write_asset_csv(str(raw), f"LESIT0{d}", (2023, 6, 30), _deal_rows(d, 4, frozenset({d - 1})))
+        raws.append(str(raw))
+
+    def load(raw):
+        try:
+            pipelines.bronze_csv(spark, raw, out, "assets",
+                                 ingestion_date="2023-08-02", ledger=ledger)
+        except Exception as e:  # noqa: BLE001 — every failure is reported below
+            return str(e)
+        return None
+
+    with ThreadPoolExecutor(max_workers=len(deals)) as pool:
+        errors = [e for e in pool.map(load, raws, timeout=600) if e is not None]
+    assert errors == []
+    day2 = ledger.entries("assets").where(F.col("ingestion_date") == "2023-08-02")
+    assert sorted((r["ed_code"], r["pcd"]) for r in day2.collect()) == [
+        (f"LESIT0{d}", "2023-06-30") for d in deals]
+    b = spark.read.parquet(out)
+    assert b.count() == len(deals) * 5
+    assert b.where(F.col("iscurrent") == 0).count() == len(deals)
+
+
 def test_part_name_matches_part_key_over_file_names(spark, tmp_path):
     """The partition names the bronze stage derives on the driver equal
     the part column Spark computes from the scanned file names."""

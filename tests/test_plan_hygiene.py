@@ -438,16 +438,52 @@ def test_read_edw_csv_filters_only_above_the_window(spark, wide_csv):
     assert refs == {"_rn", "_blank"}, above[0]
 
 
-def test_wide_edw_build_py4j_budget(spark, wide_csv, monkeypatch):
-    """Building read_edw_csv + cast_to_datatype + scd2_stamp at full width
-    stays within 1,000 py4j commands: each wide projection is parsed SQL
-    text, one command per column, where the Column-API builders sent one
-    per expression node (about 31k for the three)."""
+@pytest.fixture(scope="module")
+def wide_merge_inputs(spark, wide_csv, tmp_path_factory):
+    """A day-1 bronze of the wide file, read partition-pruned as the merge's
+    ``old``; the same file read again is the day-2 batch."""
+    import os
+
+    from les_etl_pipeline_spark import pipelines
+    from pyspark.sql import functions as F
+
+    bronze = str(tmp_path_factory.mktemp("wide_bronze") / "assets")
+    pipelines.bronze_csv(spark, os.path.dirname(wide_csv), bronze, "assets")
+    return spark.read.parquet(bronze).where(F.col("part") == "LESW01_20230630")
+
+
+def test_scd2_merge_is_one_join(spark, wide_csv, wide_merge_inputs):
+    """The merge scans each input once and joins them once: one CSV scan
+    (the batch feeds one join), one parquet scan (history rows pass the
+    join unmatched instead of being scanned apart), no broadcast, and at
+    most four hash exchanges (label-row window, dedupe window, the two
+    join sides)."""
+    from les_etl_pipeline_spark import schemas
+    from les_etl_pipeline_spark.operators.normalize import scd2_stamp
+    from les_etl_pipeline_spark.operators.scd2 import scd2_merge
+    from les_etl_pipeline_spark.sources.csv_ingest import read_edw_csv
+
+    df = read_edw_csv(spark, [wide_csv], "assets")
+    stamped = scd2_stamp(df, sorted(c for c in df.columns if c != "filename"))
+    merged = scd2_merge(wide_merge_inputs, stamped, schemas.MERGE_KEYS["assets"])
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    shape = [plan.count(s) for s in ("FileScan csv", "FileScan parquet", "BroadcastExchange")]
+    assert shape == [1, 1, 0], (shape, plan)
+    assert plan.count("Exchange hashpartitioning") <= 4, plan
+
+
+def test_wide_edw_build_py4j_budget(spark, wide_csv, wide_merge_inputs, monkeypatch):
+    """Building read_edw_csv + cast_to_datatype + scd2_stamp + scd2_merge
+    at full width stays within 1,000 py4j commands: each wide projection
+    is parsed SQL text, one command per column, where the Column-API
+    builders sent one per expression node (about 31k for the first
+    three)."""
     import py4j.java_gateway as jg
 
     from les_etl_pipeline_spark import schemas
     from les_etl_pipeline_spark.operators.cast_engine import cast_to_datatype
     from les_etl_pipeline_spark.operators.normalize import scd2_stamp
+    from les_etl_pipeline_spark.operators.scd2 import scd2_merge
     from les_etl_pipeline_spark.sources.csv_ingest import read_edw_csv
 
     sent = [0]
@@ -460,6 +496,7 @@ def test_wide_edw_build_py4j_budget(spark, wide_csv, monkeypatch):
     monkeypatch.setattr(jg.GatewayClient, "send_command", counted)
     df = read_edw_csv(spark, [wide_csv], "assets")
     cast_to_datatype(df, schemas.ASSET_COLUMNS)
-    scd2_stamp(df, sorted(c for c in df.columns if c != "filename"))
+    stamped = scd2_stamp(df, sorted(c for c in df.columns if c != "filename"))
+    scd2_merge(wide_merge_inputs, stamped, schemas.MERGE_KEYS["assets"])
     monkeypatch.undo()
     assert 0 < sent[0] <= 1000, sent[0]
