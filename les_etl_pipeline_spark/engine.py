@@ -53,7 +53,7 @@ class Engine:
     def bronze_bond_info(self, raw_prefix: str, out_path: str, **kw) -> DataFrame | None:
         return pipelines.bronze_csv(self.spark, raw_prefix, out_path, "bond_info", **kw)
 
-    def bronze_deal_details(self, xml_paths: list[str], out_path: str) -> DataFrame:
+    def bronze_deal_details(self, xml_paths: list[str], out_path: str) -> DataFrame | None:
         return pipelines.bronze_deal_details(self.spark, xml_paths, out_path)
 
     def silver_assets(self, bronze_path: str, out_dir: str, part: str | None = None):

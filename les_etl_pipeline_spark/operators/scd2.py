@@ -33,8 +33,10 @@ from pyspark.sql.window import Window
 from .normalize import ident
 
 
-def _one_row_per_key(new: DataFrame, key: list[str]) -> DataFrame:
-    """Collapse an incoming batch to one row per merge key.
+def one_row_per_key(new: DataFrame, primary_cols: list[str]) -> DataFrame:
+    """Collapse an incoming batch to one row per merge key (ed_code, pcd,
+    *primary_cols). scd2_merge applies it to its batch; a first load, with
+    no old rows to merge with, applies it alone.
 
     A repeated key in one batch (a row duplicated inside an EDW file —
     present in the reference's data, handled there by the silver layer's
@@ -43,12 +45,9 @@ def _one_row_per_key(new: DataFrame, key: list[str]) -> DataFrame:
     iscurrent=1 versions would be inserted for one key. Deterministic
     winner: highest checksum (arbitrary but stable across runs/engines).
     """
+    key = ["ed_code", "pcd", *primary_cols]
     w = Window.partitionBy(*key).orderBy(F.col("checksum").desc_nulls_last())
-    return (
-        new.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return new.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 def scd2_merge(
@@ -61,7 +60,7 @@ def scd2_merge(
     state of the table (history rows + closed-out rows + current rows).
     """
     key = ["ed_code", "pcd", *primary_cols]
-    incoming = _one_row_per_key(new.selectExpr(*[ident(c) for c in old.columns]), key)
+    incoming = one_row_per_key(new.selectExpr(*[ident(c) for c in old.columns]), primary_cols)
     on = " AND ".join(["o.iscurrent = 1", *[f"o.{ident(k)} <=> n.{ident(k)}" for k in key]])
     joined = old.alias("o").join(incoming.alias("n"), F.expr(on), "full_outer")
 

@@ -71,15 +71,16 @@ def _stamp_merge_write(
 ) -> DataFrame | None:
     """SCD2-stamp ``df`` with a checksum over ``payload`` (change
     detection), merge it into the batch's partitions ``parts`` of the
-    bronze table at ``out_path`` if any of them exists (keyed on
-    schemas.MERGE_KEYS — see note there), and write those partitions.
-    Returns them as written (None if the batch had no rows): the merged
+    bronze table at ``out_path`` (keyed on schemas.MERGE_KEYS — see note
+    there), and write those partitions. A batch none of whose partitions
+    exists is only deduped, as the merge dedupes its batch. Returns the
+    partitions as written (None if the batch had no rows): the merged
     plan would re-read files the overwrite replaced, and re-stamp."""
     stamped = scd2_stamp(df, payload)
     old = _read_parts(spark, out_path, parts)
-    if old is not None:
-        stamped = scd2_ops.scd2_merge(old, stamped, schemas.MERGE_KEYS[data_type])
-    write_partitioned(stamped, out_path)
+    primary = schemas.MERGE_KEYS[data_type]
+    write_partitioned(scd2_ops.scd2_merge(old, stamped, primary) if old is not None
+                      else scd2_ops.one_row_per_key(stamped, primary), out_path)
     return _read_parts(spark, out_path, parts)
 
 

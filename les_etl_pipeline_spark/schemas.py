@@ -36,10 +36,12 @@ PRIMARY_COLS = {
 # SCD2 merge keys: a ROW identity, which the reference never defined (its
 # PRIMARY_COLS identify a deal+date, not a row — every asset row of a deal
 # shares AL1/AL2, so a merge keyed on them would fan out; the dead
-# perform_scd2 hid this). AL5 = lease id, BL1/BL2 = report date + issuer.
+# perform_scd2 hid this). AL5 = lease id; BL1/BL2 = report date + issuer
+# name a deal's bond report, whose rows are its tranches; BL25, the first
+# tranche_info column, names the tranche.
 MERGE_KEYS = {
     "assets": ["AL1", "AL2", "AL5"],
-    "bond_info": ["BL1", "BL2"],
+    "bond_info": ["BL1", "BL2", "BL25"],
     "deal_details": ["PoolCutOffDate"],
 }
 

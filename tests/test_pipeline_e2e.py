@@ -274,6 +274,28 @@ def test_bond_info_e2e(spark, tmp_path):
     assert vals == {12345.67, None}  # ND1 -> NULL at ingest
 
 
+def test_bond_reload_merges_each_tranche(spark, tmp_path):
+    """The tranches of one bond report share report date and issuer: a
+    re-load with one tranche changed closes that tranche's version and
+    keeps the other two, instead of collapsing the report to one row."""
+    from .fixtures import write_bond_csv
+
+    raw = tmp_path / "rawbond"
+    raw.mkdir()
+    path = write_bond_csv(str(raw), "BNDIT01", (2023, 6, 30))
+    bronze = str(tmp_path / "bronze_bond")
+    pipelines.bronze_csv(spark, str(raw), bronze, "bond_info")
+    with open(path, encoding="utf-8") as f:
+        body = f.read().replace("0.05", "0.06")  # tranche-b's BL13
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(body)
+    pipelines.bronze_csv(spark, str(raw), bronze, "bond_info")
+    got = sorted((r["BL25"], r["BL13"], r["iscurrent"])
+                 for r in spark.read.parquet(bronze).collect())
+    assert got == [("tranche-a", "0.08", 1), ("tranche-b", "0.05", 0),
+                   ("tranche-b", "0.06", 1), ("tranche-c", "x", 1)]
+
+
 def test_distributed_xml_parity(spark, tmp_path):
     """S5 at scale: the from_xml distributed reader reproduces the
     driver-side walk field-for-field on the shared schema, across
@@ -470,6 +492,32 @@ def test_pruned_merge_keeps_history_of_a_null_part(spark, tmp_path):
     got = sorted((r["DealSize"], r["iscurrent"], r["part"])
                  for r in spark.read.parquet(out).collect())
     assert got == [("500000000.00", 0, None), ("600000000.00", 1, None)]
+
+
+@pytest.mark.parametrize("existing", [True, False], ids=["into_existing_table", "first_table"])
+def test_first_load_of_a_deal_dedupes_repeated_keys(spark, tmp_path, existing):
+    """A deal's first load keeps one row per merge key, whether or not
+    the table already holds other deals: a row repeated in the day-1 file
+    changed on day 2 gives one closed and one current version."""
+    day0, day1, day2 = tmp_path / "day0", tmp_path / "day1", tmp_path / "day2"
+    for d in (day0, day1, day2):
+        d.mkdir()
+    write_asset_csv(str(day0), "LESIT01", (2023, 6, 30), _deal_rows(1, 3))
+    rows = _deal_rows(2, 3)
+    write_asset_csv(str(day1), "LESIT02", (2023, 6, 30), [*rows, rows[0]])
+    write_asset_csv(str(day2), "LESIT02", (2023, 6, 30), _deal_rows(2, 3, frozenset({0})))
+    out = str(tmp_path / "bronze")
+    if existing:
+        pipelines.bronze_csv(spark, str(day0), out, "assets")
+
+    def versions():
+        t = spark.read.parquet(out).where(F.col("AL5") == "ls-2-0")  # cells are lowercased
+        return sorted(r["iscurrent"] for r in t.collect())
+
+    pipelines.bronze_csv(spark, str(day1), out, "assets")
+    assert versions() == [1]
+    pipelines.bronze_csv(spark, str(day2), out, "assets")
+    assert versions() == [0, 1]
 
 
 def test_bronze_returns_the_partitions_as_written(spark, tmp_path):
