@@ -14,11 +14,10 @@ all deals via `part` partitioning.
 from __future__ import annotations
 
 import argparse
-import glob
-import os
 import sys
 
 from .engine import Engine
+from .sources.xml_ingest import list_deal_xml
 
 BRONZE_STAGES = {"bronze_assets", "bronze_bond_info", "bronze_deal_details"}
 SILVER_STAGES = {"silver_assets", "silver_bond_info", "silver_deal_details"}
@@ -63,15 +62,15 @@ def main(argv: list[str] | None = None) -> int:
         if not a.raw_prefix or not a.output:
             p.error("--raw-prefix and --output required for bronze stages")
         if a.stage_name == "bronze_deal_details":
-            xmls = sorted(glob.glob(os.path.join(a.raw_prefix, "**", "*.xml"), recursive=True))
-            eng.bronze_deal_details(xmls, a.output)
+            xmls = list_deal_xml(a.raw_prefix, a.file_key)
+            out = eng.bronze_deal_details(xmls, a.output) if xmls else None
         else:
             fn = eng.bronze_assets if a.stage_name == "bronze_assets" else eng.bronze_bond_info
             out = fn(a.raw_prefix, a.output, file_key=a.file_key,
                      ingestion_date=a.ingestion_date)
-            if out is None:
-                print("no input files found", file=sys.stderr)
-                return 1
+        if out is None:
+            print("no input files found", file=sys.stderr)
+            return 1
         return 0
 
     # silver stages

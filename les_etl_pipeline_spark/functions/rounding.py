@@ -29,12 +29,6 @@ def hround(c: Column | str, digits: int = 2) -> Column:
     return (F.floor(c * F.lit(float(p)) + F.lit(0.5)) / F.lit(float(p))).cast("double")
 
 
-def hround_sql(expr: str, digits: int = 2) -> str:
-    """The identical formula as DuckDB SQL text."""
-    p = 10 ** digits
-    return f"(floor(({expr}) * {p}.0 + 0.5) / {p}.0)"
-
-
 def cents_sum(c: Column | str) -> Column:
     """Order-independent money sum in integer CENTS: per-row
     ``floor(x * 100 + 0.5)`` runs the same IEEE-754 ops on the same

@@ -1,10 +1,10 @@
 """Deterministic Lloyd k-means over embedding columns.
 
-``pyspark.ml.clustering.KMeans`` (used by the IVF/PQ index builders in
-``operators/similarity.py``) is seeded but not engine-portable: its
+``pyspark.ml.clustering.KMeans`` is seeded but not engine-portable: its
 k-means|| init and float32 aggregation cannot be reproduced by an oracle
 SQL engine. This module is the oracle-checkable face of clustering —
-corpus bucketing for mixture curation / semantic dedup tiers:
+corpus bucketing for mixture curation / semantic dedup tiers, and the
+coarse quantizer of the IVF/PQ indexes in ``operators/similarity.py``:
 
 - seeds are the ``k`` lowest-id vectors (rank order = cluster id), so
   both engines start from identical centroids;
@@ -85,28 +85,17 @@ def kmeans_lloyd_full(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed_vectors: list[list[float]] | None = None,
 ) -> tuple[DataFrame, dict[int, list[float]]]:
     """``kmeans_lloyd`` plus the FINAL centroid dict (cluster -> vector)
     — callers like the IVF coarse quantizer need the centroids to rank
-    probe cells, and re-deriving them would cost another pass.
-
-    ``seed_vectors`` lets a caller that already collected the ordered
-    id-prefix (ivf_pq_topk shares one fetch between the coarse quantizer
-    and the PQ codebooks) supply the k seed vectors directly and skip
-    the duplicate driver round-trip; they MUST be the double-cast
-    vectors of the k lowest-id rows, in id order, or the oracle replay
-    breaks."""
+    probe cells, and re-deriving them would cost another pass."""
     e = df.select(
         F.col(id_col).alias("vec_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
     )
-    if seed_vectors is None:
-        # k x d scalar seed fetch — metadata-scale by design (module doc)
-        seeds = e.orderBy("vec_id").limit(k).collect()
-        cents = {i: list(r.v) for i, r in enumerate(seeds)}
-    else:
-        cents = {i: [float(x) for x in v] for i, v in enumerate(seed_vectors[:k])}
+    # k x d scalar seed fetch — metadata-scale by design (module doc)
+    seeds = e.orderBy("vec_id").limit(k).collect()
+    cents = {i: list(r.v) for i, r in enumerate(seeds)}
     assign = _assign(e, cents)
     for _ in range(iters - 1):
         rows = (

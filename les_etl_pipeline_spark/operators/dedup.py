@@ -144,7 +144,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.1,
     max_shingle_freq: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Document pairs (id_a < id_b) with shingle-set Jaccard >= threshold.
 
@@ -166,12 +165,12 @@ def ngram_jaccard_pairs(
     Set sizes always count the FULL shingle set (true Jaccard
     denominators) — pruning touches only pair generation.
 
-    ``materialize`` checkpoints the per-doc distinct-hash arrays before
-    their two consumers (size projection + posting explode) — without it
-    the tokenize/shingle/array_distinct pipeline executes per consumer
-    (same-session A/B at sf0.1: 1.5 s with vs 2.9 s without — the
-    array build dominates, so always materialize). On a cluster, swap
-    localCheckpoint for a persisted staging table."""
+    The per-doc distinct-hash arrays are checkpointed before their two
+    consumers (size projection + posting explode) — without the cut the
+    tokenize/shingle/array_distinct pipeline executes per consumer
+    (same-session A/B at sf0.1: 1.5 s with vs 2.9 s without — the array
+    build dominates). On a cluster, swap localCheckpoint for a persisted
+    staging table."""
     # group key is the 64-bit hash of the shingle, not the string: same
     # counts (collisions ~2^-64), ~5x fewer shuffle bytes at scale.
     # The per-doc DISTINCT shingle-hash ARRAY is the materialized unit
@@ -181,7 +180,7 @@ def ngram_jaccard_pairs(
     # to count per-doc distincts (measured 0.64 s of a 2.2 s total at
     # sf0.1). The posting explode re-derives rows from the compact
     # checkpoint, so the explode work happens once either way.
-    stats = _ngram_pair_stats(df, text_col, id_col, k, max_shingle_freq, materialize)
+    stats = _ngram_pair_stats(df, text_col, id_col, k, max_shingle_freq)
     jac = F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
     return stats.where(jac >= F.lit(threshold)).select(
         "id_a", "id_b", jac.alias("jaccard_raw")
@@ -194,7 +193,6 @@ def _ngram_pair_stats(
     id_col: str,
     k: int,
     max_shingle_freq: int | None,
-    materialize: bool,
 ) -> DataFrame:
     """Shared inverted-index core of the shingle-set pair family:
     (id_a < id_b, n_inter, n_a, n_b) for every doc pair with at least one
@@ -217,9 +215,7 @@ def _ngram_pair_stats(
         F.array_distinct(
             F.transform(shingles("_txt", k), lambda s: F.xxhash64(s))
         ).alias("shs"),
-    )
-    if materialize:
-        sh_arr = sh_arr.localCheckpoint()
+    ).localCheckpoint()
     sizes = sh_arr.select("doc_id", F.size("shs").alias("n_sh"))  # shuffle-free
     sh = sh_arr.select("doc_id", F.explode("shs").alias("sh"))
     posts = (
@@ -257,7 +253,6 @@ def ngram_containment_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
-    materialize: bool = True,
 ) -> DataFrame:
     """Directed shingle-set CONTAINMENT (Broder): c_ab = |A∩B| / |A| and
     c_ba = |A∩B| / |B| for pairs where either direction reaches
@@ -268,7 +263,7 @@ def ngram_containment_pairs(
     alone systematically miss subset/quotation duplication. Same
     single-shuffle inverted-index plan and frequency-cap discipline as
     ngram_jaccard_pairs (shared core: _ngram_pair_stats)."""
-    stats = _ngram_pair_stats(df, text_col, id_col, k, max_shingle_freq, materialize)
+    stats = _ngram_pair_stats(df, text_col, id_col, k, max_shingle_freq)
     c_ab = F.col("n_inter") / F.col("n_a")
     c_ba = F.col("n_inter") / F.col("n_b")
     return stats.where(
@@ -902,36 +897,24 @@ def dedup_corpus(
     id_col: str = "doc_id",
     fuzzy_threshold: float | None = 0.8,
     k: int = 3,
-    fuzzy_method: str = "jaccard",
 ) -> DataFrame:
     """The end-to-end dedup a training-data pipeline actually runs:
     drop exact duplicates (normalized-hash groups), then drop fuzzy
     near-duplicates (Jaccard clusters), keeping the minimum-id canonical
     document of every group. Returns the surviving rows of ``df``.
 
-    fuzzy_threshold=None skips the fuzzy stage (exact-only).
-    ``fuzzy_method``: "jaccard" generates pairs with true shingle
-    Jaccard (exact recall at the threshold — the oracle-checkable
-    default); "lsh" swaps in the self-tuned MinHash banding
-    (minhash_banded_pairs) — the 100 TB path, where candidate
-    generation stays sublinear and the cluster/keep logic is
-    identical.
+    fuzzy_threshold=None skips the fuzzy stage (exact-only). Fuzzy pairs
+    come from true shingle Jaccard (``ngram_jaccard_pairs``: exact recall
+    at the threshold, oracle-checkable).
     """
     exact = exact_dedup_groups(df, text_col, id_col, normalize=True)
     keep_exact = exact.select(F.col("canonical_id").alias(id_col))
     survivors = df.join(keep_exact, id_col, "left_semi")
 
     if fuzzy_threshold is not None:
-        if fuzzy_method == "lsh":
-            pairs = minhash_banded_pairs(
-                survivors, text_col, id_col, threshold=fuzzy_threshold, ngram=k
-            )
-        elif fuzzy_method == "jaccard":
-            pairs = ngram_jaccard_pairs(
-                survivors, text_col, id_col, k=k, threshold=fuzzy_threshold
-            ).select("id_a", "id_b")
-        else:
-            raise ValueError(f"unknown fuzzy_method {fuzzy_method!r}")
+        pairs = ngram_jaccard_pairs(
+            survivors, text_col, id_col, k=k, threshold=fuzzy_threshold
+        ).select("id_a", "id_b")
         clusters = connected_components(pairs)
         # every clustered doc except its cluster's canonical (min id) drops
         drop = clusters.where(F.col("doc_id") != F.col("cluster")).select(
@@ -1177,7 +1160,6 @@ def duplicated_spans(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_fn: str = "xxhash64",
 ) -> DataFrame:
     """Exact duplicated-substring spans, the character-level dedup of
     Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -1206,19 +1188,17 @@ def duplicated_spans(
     INTERNAL, so the result is identical under any injective-in-practice
     keying and the DuckDB oracle may key by md5 instead (the same
     argument as ``ngram_jaccard_pairs``' 64-bit shingle keys: collisions
-    ~2^-64 could only merge two distinct grams). ``hash_fn="md5"`` keeps
-    the plan literally oracle-identical for A/B and audits.
+    ~2^-64 could only merge two distinct grams).
     """
     base = docs.select(id_col, text_col).where(F.length(text_col) >= gram_len)
     gram = F.col("_t").substr(F.col("i"), F.lit(gram_len))
-    key = F.xxhash64(gram) if hash_fn == "xxhash64" else F.md5(gram)
     pos = base.select(
         F.col(id_col).alias("doc_id"),
         F.col(text_col).alias("_t"),
         F.explode(
             F.sequence(F.lit(1), F.length(text_col) - F.lit(gram_len - 1))
         ).alias("i"),
-    ).select("doc_id", "i", key.alias("g"))
+    ).select("doc_id", "i", F.xxhash64(gram).alias("g"))
     dup_grams = (
         pos.groupBy("g")
         .agg(F.count("*").alias("c"))

@@ -559,7 +559,7 @@ def decode_features(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(op, schema=DECODED_SCHEMA)
 
 
-def extract_features(assets: DataFrame, batch_size: int | None = None) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over binary payloads. Arrow moves
     the bytes JVM->pandas in columnar batches; partition-parallel, no
     driver involvement — the pattern scales to real decoders unchanged."""

@@ -260,70 +260,49 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    codebooks: str = "lloyd",
     neq_col: str | None = None,
 ) -> DataFrame:
     """IVF-style ANN: k-means coarse quantizer assigns every vector to a
     cell; a query scores only vectors in its ``n_probe`` nearest cells.
     The 100 TB inverted-file pattern: candidate set shrinks by
     ~n_cells/n_probe, cells are the partition key, and the centroid table
-    (n_cells rows) broadcasts. ``codebooks="lloyd"`` (default) trains the
-    quantizer with the deterministic, oracle-replayable
-    ``clustering.kmeans_lloyd_full``; ``"ml"`` keeps the seeded
-    pyspark.ml fit. Recall is tested against brute force in
-    tests/test_similarity_ivf.py.
+    (n_cells rows) broadcasts. The quantizer is trained by the
+    deterministic, oracle-replayable ``clustering.kmeans_lloyd_full``.
+    Recall is tested against brute force in tests/test_similarity_ivf.py.
 
     ``neq_col`` names an attribute column of ``df`` (e.g. a training
     label): candidates sharing the query's value are excluded BEFORE the
     top-k — hard-negative mining composed with the IVF tier. The filter
     rides the existing cell equi-join (one extra predicate, zero new
-    shuffles; the lloyd branch adds one id-keyed attribute join) and the
-    output gains ``query_neq`` / ``neighbor_neq`` columns."""
-    keep = [neq_col] if neq_col else []
-    base = with_norm(df.select(id_col, vec_col, *keep), vec_col)
-    spark = df.sparkSession
-    if codebooks == "lloyd":
-        from . import clustering
+    shuffles, plus one id-keyed attribute join) and the output gains
+    ``query_neq`` / ``neighbor_neq`` columns."""
+    from . import clustering
 
-        assign, cents = clustering.kmeans_lloyd_full(
-            base.select(id_col, "vd"), k=n_cells, iters=2,
-            id_col=id_col, vec_col="vd",
-        )
-        assigned = assign.select(
-            F.col("vec_id").alias(id_col),
-            F.col("v").alias("vd"),
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col("v"), lambda x: x * x),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-            ).alias("nrm"),
-            F.col("cluster").alias("cell"),
-        )
-        if neq_col:
-            # the Lloyd path trains on (id, vd) only; rejoin the
-            # attribute by id (equi-join, co-partitionable at scale)
-            assigned = assigned.join(df.select(id_col, neq_col), id_col)
-        centroids = driver_literal_df(spark, 
-            [(c, v) for c, v in sorted(cents.items())],
-            "cell int, cvec array<double>",
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        feats = base.withColumn("features", array_to_vector(F.col("vd")))
-        km = KMeans(k=n_cells, seed=seed, featuresCol="features", predictionCol="cell")
-        model = km.fit(feats)
-        assigned = model.transform(feats)
-
-        # centroid table: (cell, centroid vector) — tiny, broadcastable
-        centroids = driver_literal_df(spark,
-            [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-            "cell int, cvec array<double>",
-        )
+    base = with_norm(df.select(id_col, vec_col), vec_col)
+    assign, cents = clustering.kmeans_lloyd_full(
+        base.select(id_col, "vd"), k=n_cells, iters=2,
+        id_col=id_col, vec_col="vd",
+    )
+    assigned = assign.select(
+        F.col("vec_id").alias(id_col),
+        F.col("v").alias("vd"),
+        F.sqrt(
+            F.aggregate(
+                F.transform(F.col("v"), lambda x: x * x),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            )
+        ).alias("nrm"),
+        F.col("cluster").alias("cell"),
+    )
+    if neq_col:
+        # training runs on (id, vd) only; rejoin the attribute by id
+        # (equi-join, co-partitionable at scale)
+        assigned = assigned.join(df.select(id_col, neq_col), id_col)
+    centroids = driver_literal_df(df.sparkSession,
+        [(c, v) for c, v in sorted(cents.items())],
+        "cell int, cvec array<double>",
+    )
 
     # assigned feeds BOTH the query probe side and the candidate side:
     # without a lineage cut the per-row k*d argmin fold runs twice over
@@ -420,10 +399,9 @@ def lloyd_codebooks(
     iters: int = 2,
     seed_rows=None,
 ) -> DataFrame:
-    """Deterministic per-subspace PQ codebooks by Lloyd iterations — the
-    engine-portable replacement for one pyspark.ml KMeans fit PER
-    subspace (m fits x ~20 distributed jobs each; this trains ALL m
-    codebooks in ``iters`` passes over one exploded (id, j, svec) table).
+    """Deterministic per-subspace PQ codebooks by Lloyd iterations: ALL m
+    codebooks train in ``iters`` passes over one exploded (id, j, svec)
+    table.
 
     Contract mirrors operators/clustering.kmeans_lloyd so a DuckDB
     oracle can replay training bit-exactly: seeds are the subvectors of
@@ -489,9 +467,7 @@ def pq_topk(
     n_codes: int = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
     rerank: int = 0,
-    codebooks: str = "lloyd",
 ) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     (ADC) — the memory-bound scale path that complements ivf_topk's
@@ -499,8 +475,7 @@ def pq_topk(
 
     Vectors are unit-normalized (so L2 ranking == cosine ranking), split
     into ``m`` contiguous subvectors, and each subspace gets its own
-    ``n_codes``-entry k-means codebook (m driver-looped fits over a
-    constant m; each fit is distributed). Every vector compresses to m
+    ``n_codes``-entry k-means codebook. Every vector compresses to m
     small code ids — at 100 TB the candidate table the query touches is
     m bytes/vector instead of 4*dim, which is the entire point: PQ trades
     a full-vector scan's memory bandwidth for table lookups. A query
@@ -517,11 +492,9 @@ def pq_topk(
     actually serve (the 100 TB cost stays with the code-table scan, the
     rerank touches only C full vectors per query).
 
-    ``codebooks="lloyd"`` (default) trains all m codebooks with the
-    deterministic, oracle-replayable Lloyd passes of
-    ``lloyd_codebooks`` (2 distributed passes total); ``"ml"`` keeps the
-    pyspark.ml KMeans path (m seeded fits — slower, not
-    engine-portable). Approximate by construction; recall against brute
+    All m codebooks are trained by the deterministic, oracle-replayable
+    Lloyd passes of ``lloyd_codebooks`` (2 distributed passes total).
+    Approximate by construction; recall against brute
     force is bounded in tests/test_similarity_pq.py. Argmin code
     assignment tie-breaks on the lower code id (min_by over a
     (d2, code) struct) so encoding is deterministic; ADC accumulates
@@ -530,35 +503,14 @@ def pq_topk(
     base = with_norm(df.select(id_col, vec_col), vec_col).withColumn(
         "ud", F.transform("vd", lambda x: x / F.col("nrm"))
     )
-    spark = df.sparkSession
-    if codebooks == "lloyd":
-        # one driver round-trip serves both the dim probe and the Lloyd
-        # seed rows (ADVICE r7 #4 — was two jobs over the same prefix)
-        seed_rows = base.orderBy(id_col).limit(n_codes).collect()
-        dim = len(seed_rows[0].ud)
-        bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
-        codebook = lloyd_codebooks(
-            base, bounds, n_codes, id_col=id_col, seed_rows=seed_rows
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        dim = len(base.select("ud").first()[0])
-        bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
-        cb_rows = []
-        for j, (lo, hi) in enumerate(bounds):
-            feats = base.select(
-                array_to_vector(F.slice("ud", lo + 1, hi - lo)).alias("features")
-            )
-            model = KMeans(
-                k=n_codes, seed=seed + j, featuresCol="features", predictionCol="code"
-            ).fit(feats)
-            cb_rows += [
-                (j, c, [float(x) for x in center])
-                for c, center in enumerate(model.clusterCenters())
-            ]
-        codebook = spark.createDataFrame(cb_rows, "j int, code int, cvec array<double>")
+    # one driver round-trip serves both the dim probe and the Lloyd
+    # seed rows (ADVICE r7 #4 — was two jobs over the same prefix)
+    seed_rows = base.orderBy(id_col).limit(n_codes).collect()
+    dim = len(seed_rows[0].ud)
+    bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
+    codebook = lloyd_codebooks(
+        base, bounds, n_codes, id_col=id_col, seed_rows=seed_rows
+    )
 
     sub_structs = _sub_structs(bounds)
     d2 = _sub_d2()
@@ -640,8 +592,9 @@ def _lloyd_ivf_pq_train(
     order, empty clusters/codes drop out).
 
     Equivalent by construction to the iters=2 pair
-    ``kmeans_lloyd_full(base[id, ud], k=n_cells, seed_vectors=prefix)``
-    + ``lloyd_codebooks(base, bounds, n_codes, seed_rows=prefix)``.
+    ``kmeans_lloyd_full(base[id, ud], k=n_cells)`` (whose seeds are the
+    same lowest-id prefix) + ``lloyd_codebooks(base, bounds, n_codes,
+    seed_rows=prefix)``.
     Returns (final assign DataFrame, cents dict, codebook DataFrame)."""
     from . import clustering
 
@@ -721,8 +674,6 @@ def ivf_pq_topk(
     rerank: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    codebooks: str = "lloyd",
 ) -> DataFrame:
     """IVF-PQ: the production ANN composition of this module's two scale
     paths. The IVF coarse quantizer (k-means cells) bounds WHICH vectors
@@ -734,81 +685,44 @@ def ivf_pq_topk(
     distance tables broadcast, and the full vectors are only read for
     the C*Q short-list rows.
 
-    ``codebooks="lloyd"`` (default) trains the coarse quantizer with
-    ``clustering.kmeans_lloyd_full`` and all m subspace codebooks with
-    ``lloyd_codebooks`` — deterministic, oracle-replayable, and a
-    handful of distributed passes instead of m+1 pyspark.ml fits;
-    ``"ml"`` keeps the seeded pyspark.ml path. Recall vs brute force
-    bounded in tests/test_similarity_pq.py."""
+    The coarse quantizer and all m subspace codebooks are trained by
+    the Lloyd contract of ``clustering.kmeans_lloyd_full`` and
+    ``lloyd_codebooks`` (fused into one update pass,
+    ``_lloyd_ivf_pq_train``) — deterministic and oracle-replayable.
+    Recall vs brute force bounded in tests/test_similarity_pq.py."""
     base = with_norm(df.select(id_col, vec_col), vec_col).withColumn(
         "ud", F.transform("vd", lambda x: x / F.col("nrm"))
     )
-    spark = df.sparkSession
-
-    if codebooks == "lloyd":
-        # ONE ordered-prefix fetch serves the coarse quantizer's n_cells
-        # seeds, the PQ codebooks' n_codes seeds, and the dim probe
-        # (VERDICT r8 — the lloyd branch previously made two bounded
-        # driver round-trips over the same prefix)
-        prefix = (
-            base.select(F.col(id_col), F.col("ud"))
-            .orderBy(id_col)
-            .limit(max(n_cells, n_codes))
-            .collect()
-        )
-        dim = len(prefix[0].ud)
-        bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
-        # ---- IVF coarse cells + PQ codebooks, trained in ONE fused
-        # update collect (r14 — was two sequential collects plus an
-        # eager checkpoint of the single-use subvector explode)
-        assign, cents, codebook = _lloyd_ivf_pq_train(
-            base, bounds, n_cells, n_codes, prefix, id_col
-        )
-        # lazy (r15): every consumer (codes explode, probe window,
-        # ADC query table, rerank vector sides) runs inside the final
-        # action and the first to materialize computes all partitions —
-        # eager paid one extra driver-blocking job at build
-        assigned = lazy_ckpt(assign.select(
-            F.col("vec_id").alias(id_col),
-            F.col("v").alias("ud"),
-            F.col("cluster").alias("cell"),
-        ))
-        centroids = driver_literal_df(spark,
-            [(c, v) for c, v in sorted(cents.items())],
-            "cell int, cvec array<double>",
-        )
-    else:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        dim = len(base.select("ud").first()[0])
-        # ---- IVF: coarse cells over the unit vectors
-        feats = base.withColumn("features", array_to_vector(F.col("ud")))
-        coarse = KMeans(
-            k=n_cells, seed=seed, featuresCol="features", predictionCol="cell"
-        ).fit(feats)
-        assigned = coarse.transform(feats).select(id_col, "ud", "cell").localCheckpoint()
-        centroids = driver_literal_df(spark, 
-            [(i, [float(x) for x in c]) for i, c in enumerate(coarse.clusterCenters())],
-            "cell int, cvec array<double>",
-        )
-
-        # ---- PQ: per-subspace codebooks (one seeded ml fit per subspace)
-        bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
-        cb_rows = []
-        for j, (lo, hi) in enumerate(bounds):
-            sub_feats = assigned.select(
-                array_to_vector(F.slice("ud", lo + 1, hi - lo)).alias("features")
-            )
-            model = KMeans(
-                k=n_codes, seed=seed + 100 + j, featuresCol="features",
-                predictionCol="code",
-            ).fit(sub_feats)
-            cb_rows += [
-                (j, c, [float(x) for x in center])
-                for c, center in enumerate(model.clusterCenters())
-            ]
-        codebook = spark.createDataFrame(cb_rows, "j int, code int, cvec array<double>")
+    # ONE ordered-prefix fetch serves the coarse quantizer's n_cells
+    # seeds, the PQ codebooks' n_codes seeds, and the dim probe
+    # (VERDICT r8 — two bounded driver round-trips over the same prefix)
+    prefix = (
+        base.select(F.col(id_col), F.col("ud"))
+        .orderBy(id_col)
+        .limit(max(n_cells, n_codes))
+        .collect()
+    )
+    dim = len(prefix[0].ud)
+    bounds = [(j * dim // m, (j + 1) * dim // m) for j in range(m)]
+    # ---- IVF coarse cells + PQ codebooks, trained in ONE fused update
+    # collect (r14 — was two sequential collects plus an eager checkpoint
+    # of the single-use subvector explode)
+    assign, cents, codebook = _lloyd_ivf_pq_train(
+        base, bounds, n_cells, n_codes, prefix, id_col
+    )
+    # lazy (r15): every consumer (codes explode, probe window, ADC query
+    # table, rerank vector sides) runs inside the final action and the
+    # first to materialize computes all partitions — eager paid one extra
+    # driver-blocking job at build
+    assigned = lazy_ckpt(assign.select(
+        F.col("vec_id").alias(id_col),
+        F.col("v").alias("ud"),
+        F.col("cluster").alias("cell"),
+    ))
+    centroids = driver_literal_df(df.sparkSession,
+        [(c, v) for c, v in sorted(cents.items())],
+        "cell int, cvec array<double>",
+    )
 
     sub_structs = _sub_structs(bounds)
     d2 = _sub_d2()

@@ -32,10 +32,6 @@ def regex_tokens(text: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), F.lit(0))
 
 
-def token_count(text: Column | str, regex: bool = False) -> Column:
-    return F.size(regex_tokens(text) if regex else ws_tokens(text))
-
-
 def stopword_hits(tokens: Column, lang: str) -> Column:
     words = LANG_STOPWORDS[lang]
     return F.size(F.filter(tokens, lambda t: t.isin(words)))

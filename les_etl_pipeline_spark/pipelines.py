@@ -42,7 +42,7 @@ from . import schemas
 from .functions.literal_df import local_df
 from .operators import scd2 as scd2_ops
 from .operators.cast_engine import cast_to_datatype
-from .operators.normalize import key_from_filename, part_key, part_name, scd2_stamp
+from .operators.normalize import ident, key_from_filename, part_key, part_name, scd2_stamp
 from .operators.validation import profile_data, split_flagged
 from .operators.vertical import range_columns, topic_tables
 from .sinks.writers import RunLedger, write_partitioned, write_quarantine
@@ -84,11 +84,21 @@ def _stamp_merge_write(
     return _read_parts(spark, out_path, parts)
 
 
-def _current(spark: SparkSession, bronze_path: str, part: str | None) -> DataFrame:
-    """The bronze table's current rows, restricted to one part if given."""
-    bronze = spark.read.parquet(bronze_path)
-    if part is not None:
-        bronze = bronze.where(F.col("part") == part)  # partition-pruned scan (S6/P1)
+def _current(
+    spark: SparkSession, bronze_path: str, part: str | None, cast_map: dict
+) -> DataFrame:
+    """The bronze table's current rows, or only partition ``part``'s if
+    given: then only that partition's directory is listed (``_read_parts``),
+    so a concurrent load of other deals cannot fail the read. A part that
+    the table does not hold gives an empty snapshot of the lineage and
+    ``cast_map`` columns, all strings as at bronze."""
+    bronze = (spark.read.parquet(bronze_path) if part is None
+              else _read_parts(spark, bronze_path, {part}))
+    if bronze is None:
+        if not os.path.isdir(bronze_path):
+            raise FileNotFoundError(f"no bronze table at {bronze_path!r}")
+        cols = dict.fromkeys([*schemas.LINEAGE_COLS, *cast_map, "part"])
+        return local_df(spark, [], ", ".join(f"{ident(c)} string" for c in cols))
     return scd2_ops.current_snapshot(bronze)
 
 
@@ -164,7 +174,8 @@ def _silver(
     ranges: dict[str, tuple[str, int, int]],
     part: str | None = None,
 ) -> dict[str, DataFrame]:
-    flagged = profile_data(_current(spark, bronze_path, part), rules, strict_columns=False,
+    current = _current(spark, bronze_path, part, cast_map)
+    flagged = profile_data(current, rules, strict_columns=False,
                            lineage_cols=schemas.LINEAGE_COLS)
     # one validation pass feeds the counters, the quarantine and every topic
     flagged = flagged.persist(StorageLevel.MEMORY_AND_DISK)
@@ -216,7 +227,8 @@ def silver_bond_info(spark, bronze_path, out_dir, part=None):
 def silver_deal_details(spark, bronze_path, out_dir, part=None):
     """Deal-details silver: cast + dedup (no topic split — one narrow
     table, generate_deal_details_silver.py:96-113)."""
-    typed = cast_to_datatype(_current(spark, bronze_path, part), schemas.DEAL_DETAILS_COLUMNS)
+    cast_map = schemas.DEAL_DETAILS_COLUMNS
+    typed = cast_to_datatype(_current(spark, bronze_path, part, cast_map), cast_map)
     out = typed.dropDuplicates(["ed_code", "PoolCutOffDate"])
     write_partitioned(out, os.path.join(out_dir, "deal_details"))
     return out

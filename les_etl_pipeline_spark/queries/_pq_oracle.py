@@ -1,7 +1,7 @@
 """DuckDB oracle generators for the product-quantization ANN queries.
 
-With ``codebooks="lloyd"`` (the registered default since round 7) every
-stage of PQ / IVF-PQ is deterministic and engine-portable, so the whole
+Every stage of PQ / IVF-PQ is deterministic and engine-portable (Lloyd
+training since round 7), so the whole
 index — unit-normalize, seed codebooks from the n_codes lowest ids, one
 Lloyd update, encode, per-query ADC tables, DECIMAL-exact ADC sums,
 short-list, exact cosine re-rank — replays bit-exactly in SQL. The
@@ -141,7 +141,7 @@ def _adc_tail(k: int, rerank: int, query_sql: str, cell_filter: bool, m: int = 0
 def pq_topk_oracle(
     dim: int, m: int, n_codes: int, k: int, rerank: int, query_sql: str
 ) -> str:
-    """Oracle for similarity.pq_topk(codebooks='lloyd', rerank>k)."""
+    """Oracle for similarity.pq_topk(rerank>k)."""
     return _base_cte(dim, m, n_codes) + _adc_tail(k, rerank, query_sql, False)
 
 
@@ -155,7 +155,7 @@ def ivf_pq_topk_oracle(
     rerank: int,
     query_sql: str,
 ) -> str:
-    """Oracle for similarity.ivf_pq_topk(codebooks='lloyd', rerank>k):
+    """Oracle for similarity.ivf_pq_topk(rerank>k):
     the PQ oracle plus the coarse Lloyd cells (2 iterations, same
     contract as the embedding_kmeans_lloyd oracle), per-query probe-cell
     ranking, and the all-m-subspaces completeness filter."""
@@ -211,7 +211,7 @@ def ivf_topk_oracle(
     train_sql: str | None = None,
     exclude_sql: str | None = None,
 ) -> str:
-    """Oracle for similarity.ivf_topk(codebooks='lloyd'): coarse Lloyd
+    """Oracle for similarity.ivf_topk: coarse Lloyd
     cells over the RAW double vectors (2 iterations), per-query
     n_probe-cell probing, exact cosine within probed cells, top-k.
 

@@ -81,13 +81,8 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize=True: with the per-doc distinct-hash arrays as the
-    # materialized unit, the checkpoint wins at bench scale too (A/B at
-    # sf0.1: 1.5 s vs 2.9 s — the array build is the dominant cost and
-    # must not run once per consumer). materialize=False was a tuning
-    # for the old exploded-row shape and caused the r5 bench regression.
     pairs = dedup.ngram_jaccard_pairs(
-        table(spark, sf_dir, "documents"), k=3, threshold=0.1, materialize=True
+        table(spark, sf_dir, "documents"), k=3, threshold=0.1
     )
     return pairs.select("id_a", "id_b", hround(F.col("jaccard_raw"), 4).alias("jaccard"))
 
@@ -639,7 +634,7 @@ def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe restriction + recall floor stay pinned in
     tests/test_similarity_ivf.py."""
     out = similarity.ivf_topk(
-        table(spark, sf_dir, "embeddings"), F.col("vec_id") < 10, k=5, seed=42
+        table(spark, sf_dir, "embeddings"), F.col("vec_id") < 10, k=5
     )
     return out.select(
         "query_id", "neighbor_id", hround(F.col("cos"), 6).alias("cosine"), "rank"

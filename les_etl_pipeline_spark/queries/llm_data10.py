@@ -30,8 +30,6 @@ Round 8 additions:
   (SEMDEDUP_MAX_CLUSTER md5 sub-split, replayed in the oracle).
 - ``similarity_hard_negatives_ivf``: the hard-negative label predicate
   composed with the IVF ANN tier (``similarity.ivf_topk(neq_col=...)``).
-- ``etl_leakage_safe_split`` gained the LSH pair-graph tier
-  (``leakage_safe_split_df(fuzzy_method="lsh")``).
 - ``dedup_incremental_batch``: new-batch-vs-corpus-index dedup — the
   daily-increment shape (O(delta + candidates) per ingest, never a
   corpus rescan).
@@ -681,69 +679,15 @@ def etl_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster. Deterministic md5 bucketing (80/10/10), the same portable
     hash-split idiom as operators/sampling.py.
 
-    100 TB posture: components come from the banded/inverted-index pair
-    graph (min-label propagation with localCheckpoint cuts); the split
-    itself adds one LEFT join on doc_id and a pure projection — no new
-    data-scale shuffle beyond what dedup already paid. The registered
-    form keeps the exact Jaccard tier (oracle-replayable); at corpus
-    scale pass ``fuzzy_method="lsh"`` to ``leakage_safe_split_df`` to
-    source the pair graph from MinHash banding instead (same option
-    surface as ``dedup.dedup_corpus``; split-assignment parity on the
-    fixture is pinned in tests/test_round8_ops.py)."""
-    return leakage_safe_split_df(table(spark, sf_dir, "documents"))
-
-
-def leakage_safe_split_df(
-    docs: DataFrame, fuzzy_method: str = "jaccard"
-) -> DataFrame:
-    """Body of ``etl_leakage_safe_split`` with the pair-graph tier
-    parameterized. ``"jaccard"`` = exact shingle-Jaccard pairs (the
-    registered, oracle-replayed default); ``"lsh"`` = banded MinHash
-    candidates + exact Jaccard verify (VERDICT r7 #7) — candidate
-    generation is sublinear and the verify join touches only candidate
-    pairs, so precision is exact and the only approximation is banding
-    recall (near 1 at threshold 0.1: 64 OR-amplified bands). Recall
-    errors are safe in the direction that matters for dedup — a missed
-    pair can only SPLIT a cluster, never merge one — but for a
-    leakage-safe SPLIT a split cluster is exactly the straddle risk, so
-    the fixture parity test pins LSH==exact assignments."""
-    if fuzzy_method == "lsh":
-        cand = dedup.minhash_banded_pairs(docs, threshold=0.1, ngram=3)
-        # exact verify: same jaccard the exact tier computes (distinct
-        # xxhash64 shingle sets), evaluated only on candidate pairs
-        sh = docs.select(
-            F.col("doc_id"),
-            F.array_distinct(
-                F.transform(shingles("text", 3), lambda s: F.xxhash64(s))
-            ).alias("shs"),
-        ).localCheckpoint()
-        pairs = (
-            cand.join(
-                sh.select(
-                    F.col("doc_id").alias("id_a"), F.col("shs").alias("sha")
-                ),
-                "id_a",
-            )
-            .join(
-                sh.select(
-                    F.col("doc_id").alias("id_b"), F.col("shs").alias("shb")
-                ),
-                "id_b",
-            )
-            .withColumn("n_inter", F.size(F.array_intersect("sha", "shb")))
-            .where(
-                F.col("n_inter")
-                / (F.size("sha") + F.size("shb") - F.col("n_inter"))
-                >= F.lit(0.1)
-            )
-            .select("id_a", "id_b")
-        )
-    elif fuzzy_method == "jaccard":
-        pairs = dedup.ngram_jaccard_pairs(docs, k=3, threshold=0.1).select(
-            "id_a", "id_b"
-        )
-    else:
-        raise ValueError(f"unknown fuzzy_method {fuzzy_method!r}")
+    100 TB posture: components come from the inverted-index pair graph
+    (min-label propagation with localCheckpoint cuts); the split itself
+    adds one LEFT join on doc_id and a pure projection — no new
+    data-scale shuffle beyond what dedup already paid. The pair graph is
+    the exact shingle-Jaccard tier (oracle-replayable)."""
+    docs = table(spark, sf_dir, "documents")
+    pairs = dedup.ngram_jaccard_pairs(docs, k=3, threshold=0.1).select(
+        "id_a", "id_b"
+    )
     comp = dedup.connected_components(pairs)
     assigned = docs.select("doc_id").join(comp, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster", "doc_id").alias("cluster")

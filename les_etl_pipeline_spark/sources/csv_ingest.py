@@ -59,7 +59,6 @@ def read_edw_csv(
     spark: SparkSession,
     paths: list[str] | str,
     data_type: str = "assets",
-    capture_corrupt: bool = False,
 ) -> DataFrame:
     """Distributed EDW CSV read with the S4 cleaning semantics.
 
@@ -68,24 +67,16 @@ def read_edw_csv(
     EDW files are per-deal (small); for huge single files prefer encoding
     the label row as a comment or stripping it upstream — the window costs
     one shuffle on (filename)."""
-    reader = spark.read.option("header", True).option("inferSchema", False).option(
-        "encoding", "UTF-8"
+    df = (
+        spark.read.option("header", True).option("inferSchema", False)
+        .option("encoding", "UTF-8").csv(paths)
     )
-    if capture_corrupt:
-        # S4 bad-line capture: PERMISSIVE + corrupt-record column (the
-        # reference collected per-file parse errors into an error list)
-        reader = reader.option("mode", "PERMISSIVE").option(
-            "columnNameOfCorruptRecord", "_corrupt_record"
-        )
-    df = reader.csv(paths)
-    if capture_corrupt and "_corrupt_record" not in df.columns:
-        df = df.withColumn("_corrupt_record", F.lit(None).cast("string"))
     # force-rename the first header cell (bronze_funcs.py:16-19,90)
     first = df.columns[0]
     target = INITIAL_COL.get(data_type)
     if target and first != target:
         df = df.withColumnRenamed(first, target)
-    data_cols = [c for c in df.columns if c != "_corrupt_record"]
+    data_cols = df.columns
 
     df = normalize_cells(lineage_from_filename(df), data_cols)
     # blank line: every data cell null after cleaning — marked here, below

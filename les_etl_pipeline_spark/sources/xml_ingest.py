@@ -32,20 +32,16 @@ _DROP_DEAL = {"Country", "DealVisibleToOrg", "DealVisibleToUser", "Submissions",
 _DROP_SUBMISSION = {"MetricData", "IsProvisional", "IsRestructured"}
 
 
-def find_deal_xml(prefix: str, file_key: str = "") -> str:
-    """S2: exactly one matching .xml under the prefix; error on 0 or >1
-    (generate_deal_details_bronze.py:24-49)."""
-    matches = [
+def list_deal_xml(prefix: str, file_key: str) -> list[str]:
+    """S2 discovery: the .xml files under the prefix whose names contain
+    file_key, sorted. The reference ran one deal per job and required
+    exactly one match (generate_deal_details_bronze.py:24-49); here one
+    batch loads every matching deal."""
+    return [
         p
         for p in sorted(glob.glob(os.path.join(prefix, "**", "*.xml"), recursive=True))
         if file_key in os.path.basename(p)
     ]
-    if len(matches) != 1:
-        raise FileNotFoundError(
-            f"expected exactly one deal-details XML under {prefix!r} "
-            f"matching {file_key!r}, found {len(matches)}"
-        )
-    return matches[0]
 
 
 def _localname(tag: str) -> str:
@@ -100,54 +96,3 @@ def read_deal_details(spark: SparkSession, paths: list[str] | str) -> DataFrame:
 def expose_isin_array(df: DataFrame) -> DataFrame:
     """ArrayType view of the legacy ';'-joined ISIN column."""
     return df.withColumn("ISIN_array", F.split(F.col("ISIN"), ";"))
-
-
-#: deal-level scalar fields the distributed reader extracts (superset-safe:
-#: fields absent from a file parse to NULL)
-DIST_DEAL_FIELDS = (
-    "EDCode AssetClassCode AssetClassName DealSize DealVersion IsActiveDeal"
-).split()
-DIST_SUBMISSION_FIELDS = (
-    "PoolCutOffDate CurrentPoolBalance NumberOfActiveAssets"
-).split()
-
-
-def read_deal_details_distributed(
-    spark: SparkSession,
-    paths: list[str] | str,
-    deal_fields: list[str] | None = None,
-    submission_fields: list[str] | None = None,
-) -> DataFrame:
-    """Distributed twin of read_deal_details via Spark 4's built-in
-    from_xml: files scan in parallel (wholetext) and the XML walk runs
-    as a Catalyst expression on executors — no driver lxml loop. Same
-    output contract as the driver-side reader: scalar children as string
-    columns, ISIN ';'-joined, visibility fields dropped, first
-    Submission inlined minus its drop set, EDCode -> ed_code, '' -> NULL.
-
-    The reference parses deal XML driver-side
-    (generate_deal_details_bronze.py:77-144) and SURVEY.md §2.1 S5
-    blesses that for 1-row-per-deal files; this path is for when deal
-    counts explode — 10^6 small XMLs become one distributed scan."""
-    deal_fields = deal_fields or DIST_DEAL_FIELDS
-    submission_fields = submission_fields or DIST_SUBMISSION_FIELDS
-    if isinstance(paths, str):
-        paths = [paths]
-    xml_schema = (
-        ", ".join(f"{f} string" for f in deal_fields)
-        + ", ISIN struct<code: array<string>>, Submissions struct<Submission: array<struct<"
-        + ", ".join(f"{f}: string" for f in submission_fields)
-        + ">>>"
-    )
-    raw = spark.read.text(paths, wholetext=True)
-    x = F.from_xml(F.col("value"), xml_schema)
-    first_sub = x["Submissions"]["Submission"][0]
-    cols = [
-        F.nullif(x[f], F.lit("")).alias("ed_code" if f == "EDCode" else f)
-        for f in deal_fields
-    ]
-    cols.append(F.array_join(x["ISIN"]["code"], ";").alias("ISIN"))
-    cols.extend(
-        F.nullif(first_sub[f], F.lit("")).alias(f) for f in submission_fields
-    )
-    return raw.select(*cols)

@@ -5,6 +5,7 @@ validation quarantine, cast maps, and topic vertical partitioning."""
 from __future__ import annotations
 
 import os
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -176,8 +177,7 @@ def test_null_marker_row_is_blank_and_label_row_is_row_two(spark, tmp_path):
 def test_permissive_malformed_rows(spark, tmp_path):
     """S4 bad-line tolerance: PERMISSIVE parsing null-fills short rows and
     truncates long rows (the reference's csv.reader + truncation at
-    bronze_funcs.py:93-96 behaves the same; _corrupt_record engages only
-    under typed schemas, which bronze — all-string by design — never has)."""
+    bronze_funcs.py:93-96 behaves the same)."""
     d = tmp_path / "raw2"
     d.mkdir()
     path = d / "LESIT03_2023_06_30_assets.csv"
@@ -188,9 +188,7 @@ def test_permissive_malformed_rows(spark, tmp_path):
         '2023-06-30,short\n'
         'x,y,z,extra,cols\n'
     )
-    df = read_edw_csv(spark, [str(path)], "assets", capture_corrupt=True)
-    rows = df.collect()
-    assert "_corrupt_record" in df.columns
+    rows = read_edw_csv(spark, [str(path)], "assets").collect()
     assert len(rows) == 3
     by_al2 = {r["AL2"]: r for r in rows}
     assert by_al2["pool-1"]["AL3"] == "servicer"
@@ -296,33 +294,25 @@ def test_bond_reload_merges_each_tranche(spark, tmp_path):
                    ("tranche-b", "0.06", 1), ("tranche-c", "x", 1)]
 
 
-def test_distributed_xml_parity(spark, tmp_path):
-    """S5 at scale: the from_xml distributed reader reproduces the
-    driver-side walk field-for-field on the shared schema, across
-    multiple deal files in one scan."""
-    from .fixtures import write_deal_xml
-    from les_etl_pipeline_spark.sources.xml_ingest import (
-        DIST_DEAL_FIELDS,
-        DIST_SUBMISSION_FIELDS,
-        read_deal_details,
-        read_deal_details_distributed,
-    )
+def test_silver_part_reads_only_its_partition_dir(spark, raw_dir, tmp_path):
+    """A silver run for one part lists only that partition's directory, so
+    a bronze load of another deal, replacing other partitions, cannot fail
+    it. A part the table does not hold is an empty snapshot: silver still
+    writes a zero QC row."""
+    bronze = str(tmp_path / "bronze")
+    pipelines.bronze_csv(spark, raw_dir, bronze, "assets")
+    part_dir = os.path.join(bronze, "part=LESIT01_20230630")
+    cur = pipelines._current(spark, bronze, "LESIT01_20230630", schemas.ASSET_COLUMNS)
+    files = cur.inputFiles()
+    assert files and all(os.path.dirname(urlparse(f).path) == part_dir for f in files)
+    assert cur.count() == 3
 
-    d = tmp_path / "deals"
-    d.mkdir()
-    paths = [str(write_deal_xml(str(d), ed)) for ed in ("LESIT01", "LESIT02")]
-    driver_df = read_deal_details(spark, paths)
-    dist_df = read_deal_details_distributed(spark, paths)
-    shared = [
-        ("ed_code" if f == "EDCode" else f) for f in DIST_DEAL_FIELDS
-    ] + ["ISIN"] + list(DIST_SUBMISSION_FIELDS)
-    a = {r["ed_code"]: r for r in driver_df.select(*shared).collect()}
-    b = {r["ed_code"]: r for r in dist_df.select(*shared).collect()}
-    assert set(a) == {"LESIT01", "LESIT02"} and a.keys() == b.keys()
-    for k in a:
-        assert a[k].asDict() == b[k].asDict()
-    # dropped fields must not leak through the distributed path
-    assert not {"Country", "DealVisibleToOrg", "MetricData"} & set(dist_df.columns)
+    out = str(tmp_path / "silver")
+    assert pipelines.silver_assets(spark, bronze, out, part="LESIT09_20230630") == {}
+    qc = spark.read.parquet(os.path.join(out, "qc_metrics", "assets")).collect()
+    assert [tuple(r) for r in qc] == [("assets", 0, 0, 0)]
+    with pytest.raises(FileNotFoundError):
+        pipelines.silver_assets(spark, str(tmp_path / "nowhere"), out, part="LESIT01_20230630")
 
 
 def test_silver_qc_counts_exact_across_partitions(spark, tmp_path):

@@ -139,26 +139,6 @@ def test_coverage_doc_counts_match_registry():
     assert rows_only == len(QUERIES) - len(ORACLES)
 
 
-def test_leakage_split_lsh_tier_parity(spark, sf_dir):
-    """VERDICT r7 #7: the LSH-tier pair graph must reproduce the exact
-    tier's split assignments on the fixture — banded MinHash candidate
-    generation recalled every pair that matters for the component
-    structure (and any false positive could only merge clusters, which
-    the equality check also rules out here)."""
-    from les_etl_pipeline_spark.queries.llm_data10 import leakage_safe_split_df
-
-    docs = table(spark, sf_dir, "documents")
-    exact = {
-        (r.doc_id, r.split) for r in leakage_safe_split_df(docs).collect()
-    }
-    lsh = {
-        (r.doc_id, r.split)
-        for r in leakage_safe_split_df(docs, fuzzy_method="lsh").collect()
-    }
-    assert exact, "fixture must produce split assignments"
-    assert lsh == exact
-
-
 def test_bench_previous_sweep_excludes_current_round(tmp_path, monkeypatch):
     """VERDICT r7 #2/#6 plumbing: the drift baseline must come from a
     PREVIOUS round — a BENCH_SWEEP.json written by a rerun in the

@@ -192,44 +192,6 @@ def test_stream_stream_interval_join(spark, tmp_path):
     assert rows == [(2, 1)]
 
 
-def test_transform_with_state_histogram(spark, stream_dir):
-    """transformWithStateInPandas (Spark 4 StatefulProcessor + MapState):
-    per-user event-type histogram accumulates across micro-batches.
-    Skips where google.protobuf is absent (this container — the TWS
-    state-server protocol requires it; see stateful_v2 docstring)."""
-    import pytest as _pytest
-
-    from les_etl_pipeline_spark.streaming.stateful_v2 import (
-        HAVE_PROTOBUF,
-        ROCKSDB_PROVIDER,
-        user_type_histogram,
-    )
-
-    if not HAVE_PROTOBUF:
-        _pytest.skip("google.protobuf not installed; TWS worker cannot start")
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, ROCKSDB_PROVIDER)
-    try:
-        out = user_type_histogram(SW.read_event_stream(spark, stream_dir))
-        SW.run_to_memory(out, "t_tws_hist")
-        rows = spark.sql("SELECT * FROM t_tws_hist").collect()
-    finally:
-        if old is not None:
-            spark.conf.set(conf_key, old)
-        else:
-            spark.conf.unset(conf_key)
-    # user 1: batch 1 has 2 views -> (view, 2); batch 2 adds 2 more views
-    # -> cumulative (view, 4). Update mode emits one histogram per batch.
-    u1 = sorted(
-        (r["n"] for r in rows if r["user_id"] == 1 and r["event_type"] == "view")
-    )
-    assert u1 == [2, 4]
-    # user 2 clicked once in batch 1 only
-    assert any(r["user_id"] == 2 and r["event_type"] == "click" and r["n"] == 1 for r in rows)
-
-
 def test_incremental_agg_state_matches_full_recompute(spark, stream_dir, tmp_path):
     """Streaming MV maintenance: after draining the stream one file per
     micro-batch, the maintained state table equals the from-scratch
