@@ -62,8 +62,7 @@ def main(argv: list[str] | None = None) -> int:
         if not a.raw_prefix or not a.output:
             p.error("--raw-prefix and --output required for bronze stages")
         if a.stage_name == "bronze_deal_details":
-            xmls = list_deal_xml(a.raw_prefix, a.file_key)
-            out = eng.bronze_deal_details(xmls, a.output) if xmls else None
+            out = eng.bronze_deal_details(list_deal_xml(a.raw_prefix, a.file_key), a.output)
         else:
             fn = eng.bronze_assets if a.stage_name == "bronze_assets" else eng.bronze_bond_info
             out = fn(a.raw_prefix, a.output, file_key=a.file_key,

@@ -143,7 +143,10 @@ def bronze_deal_details(
     spark: SparkSession, xml_paths: list[str], out_path: str
 ) -> DataFrame | None:
     """Bronze load for deal_details XML: parse -> stamp -> merge -> write
-    (the path where the reference's perform_scd2 was dead, §2.9)."""
+    (the path where the reference's perform_scd2 was dead, §2.9).
+    Returns None, writing nothing, when ``xml_paths`` is empty."""
+    if not xml_paths:
+        return None
     df = read_deal_details(spark, xml_paths).withColumn("pcd", F.col("PoolCutOffDate"))
     # a projection of a LocalRelation: collected on the driver, no job
     parts = {r[0] for r in df.select(part_key()).collect()}

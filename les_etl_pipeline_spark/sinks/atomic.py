@@ -1,8 +1,8 @@
 """Atomic commits on a POSIX filesystem: the one place that decides how
 a file or directory becomes visible. Every sink and streaming write that
 can race or crash mid-write goes through one of these; the only other
-renames in the package are ``SnapshotStore``'s version claim, whose
-commit point is pluggable (rename or exclusive-create marker).
+renames in the package are ``SnapshotStore``'s version claim, the
+rename of a staging dir onto its version slot.
 
 - ``write_json``: small metadata files (ledger high-water marks,
   pointers, manifests). ``mkstemp`` in the target dir, ``fsync``, then

@@ -140,9 +140,7 @@ def _expected(ev):
     return EXPECT_EMPTY if ev is None else ev
 
 
-def _epoch_txn(
-    spark, index_dir: str, work, max_attempts: int = 10, before_publish=None
-) -> str:
+def _epoch_txn(spark, index_dir: str, work, before_publish=None) -> str:
     """Optimistic index transaction: run ``work(root)`` against the
     current generation, then commit by publishing a pointer epoch with
     ``expected_version`` = the epoch that was read. If ANY other writer
@@ -167,7 +165,7 @@ def _epoch_txn(
     from ..sinks.snapshot_store import ConcurrentWriteError
 
     store = _state_store(spark, index_dir)
-    for _ in range(max_attempts):
+    for _ in range(10):
         ev = store.current_version()
         root = _generation_path(store, ev)
         work(root)
@@ -185,7 +183,7 @@ def _epoch_txn(
         except ConcurrentWriteError:
             continue
     raise ConcurrentWriteError(
-        f"index {index_dir}: epoch CAS lost {max_attempts} straight races"
+        f"index {index_dir}: epoch CAS lost 10 straight races"
     )
 
 
@@ -727,9 +725,5 @@ def vacuum_index_state(spark, index_dir: str) -> list[int]:
     for v in store._versions_on_disk():
         if v < floor:
             shutil.rmtree(os.path.join(state, f"v={v}"), ignore_errors=True)
-            try:
-                os.remove(os.path.join(state, f"commit-v={v}"))
-            except OSError:
-                pass
             dropped.append(v)
     return dropped

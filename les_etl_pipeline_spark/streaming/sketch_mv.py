@@ -58,6 +58,12 @@ from . import _exactly_once as xo
 KLL_STATE_SCHEMA = "v double, u bigint, lstar int"
 KMV_STATE_SCHEMA = "h bigint"
 _MANIFEST = "_MANIFEST.json"
+#: one state version lands per folded batch, so the sinks vacuum all but
+#: the trailing N after each publish (unlike the ANN epoch log, MV
+#: versions reference nothing outside themselves, so the stock keep-last
+#: policy is safe). The cushion covers the TOCTOU of a concurrent stream
+#: still reading an older version mid-fold — its CAS retry re-reads anyway.
+_VACUUM_KEEP_LAST = 8
 
 
 def _store(spark, state_dir: str):
@@ -102,19 +108,11 @@ def sketch_mv_sink(
     capacity: int = 4096,
     kmv_k: int = 128,
     max_attempts: int = 10,
-    vacuum_keep_last: int | None = 8,
 ):
     """Drain ``stream_df`` (availableNow) into the sketch MV under
     ``state_dir``. ``key`` is the unique-per-row deterministic Column
     the coins derive from (globally unique across batches — the same
     contract as ``kll_build``; it is what makes replays collapse).
-
-    ``vacuum_keep_last``: one state version lands per folded batch, so
-    the sink vacuums all but the trailing N after each publish (unlike
-    the ANN epoch log, MV versions reference nothing outside
-    themselves, so the stock keep-last policy is safe). The cushion
-    covers the TOCTOU of a concurrent stream still reading an older
-    version mid-fold — its CAS retry re-reads anyway; None disables.
     Returns the finished query."""
     from ..sinks.snapshot_store import EXPECT_EMPTY, ConcurrentWriteError
 
@@ -159,8 +157,7 @@ def sketch_mv_sink(
                     build,
                     expected_version=EXPECT_EMPTY if cur is None else cur,
                 )
-                if vacuum_keep_last is not None:
-                    store.vacuum(keep_last=vacuum_keep_last)
+                store.vacuum(keep_last=_VACUUM_KEEP_LAST)
                 return
             except ConcurrentWriteError:
                 continue  # another stream folded its batch first; re-read
@@ -196,7 +193,6 @@ def sketch_mv_sink_grouped(
     capacity: int = 4096,
     kmv_k: int = 128,
     max_attempts: int = 10,
-    vacuum_keep_last: int | None = 8,
 ):
     """Per-group sketch MV — ``sketch_mv_sink`` with every sketch keyed
     by ``group_cols`` (per-source / per-language length and distinct
@@ -261,8 +257,7 @@ def sketch_mv_sink_grouped(
                     build,
                     expected_version=EXPECT_EMPTY if cur is None else cur,
                 )
-                if vacuum_keep_last is not None:
-                    store.vacuum(keep_last=vacuum_keep_last)
+                store.vacuum(keep_last=_VACUUM_KEEP_LAST)
                 return
             except ConcurrentWriteError:
                 continue  # another stream folded its batch first; re-read

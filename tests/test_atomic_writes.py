@@ -12,11 +12,8 @@ PKG = pathlib.Path(__file__).parents[1] / "les_etl_pipeline_spark"
 
 #: (module, enclosing function, operation) -> why it may bypass atomic.py
 ALLOWED = {
-    ("sinks/snapshot_store.py", "SnapshotStore._move", "os.rename"): (
-        "SnapshotStore claim path: layout move of a claimed version dir"
-    ),
     ("sinks/snapshot_store.py", "SnapshotStore._claim_rename", "os.rename"): (
-        "SnapshotStore claim path: the rename protocol's commit point"
+        "SnapshotStore claim path: the store's commit point"
     ),
     ("queries/llm_data15.py", "_build_stream_index.write_batch", "append"): (
         "stream-source fixture: lands the input files a stream then reads"
@@ -62,9 +59,18 @@ def test_only_atomic_module_commits_by_rename_or_append():
 
 
 def test_retired_commit_helpers_are_gone():
+    from les_etl_pipeline_spark.sinks import snapshot_store
     from les_etl_pipeline_spark.streaming import _exactly_once as xo
     from les_etl_pipeline_spark.streaming import ann_index
 
     for name in ("publish_segment", "recover_swap", "mark_complete", "is_complete"):
         assert not hasattr(xo, name), name
     assert not hasattr(ann_index, "_FLAT")
+    # one commit point (the rename claim), one current-version source
+    # (the validity chain): no marker-protocol or pointer-file helpers
+    store_names = [
+        n for n in vars(snapshot_store.SnapshotStore)
+        if n == "_move" or any(w in n for w in ("marker", "finalize", "pointer"))
+    ]
+    assert store_names == []
+    assert [n for n in vars(snapshot_store) if "MARKER" in n or n == "CURRENT"] == []

@@ -139,6 +139,14 @@ def test_deal_details_xml(spark, tmp_path):
     assert srow["IsActiveDeal"] is True
 
 
+def test_bronze_deal_details_without_input_returns_none(spark, tmp_path):
+    """No XML in: like ``bronze_csv`` with no file, the stage returns None
+    and writes nothing."""
+    out = tmp_path / "bronze_dd"
+    assert pipelines.bronze_deal_details(spark, [], str(out)) is None
+    assert not out.exists()
+
+
 def test_transliteration_udf(spark):
     from les_etl_pipeline_spark.operators.normalize import transliterate_ascii
 

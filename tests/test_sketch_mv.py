@@ -118,17 +118,17 @@ def test_replay_new_checkpoint_is_content_idempotent(spark, mv):
     assert len(manifest) == 2  # both streams' HWMs tracked
 
 
-def test_vacuum_bounds_state_versions(spark, sf_dir, tmp_path):
+def test_vacuum_bounds_state_versions(spark, sf_dir, tmp_path, monkeypatch):
     """One version lands per folded batch; the sink's vacuum keeps only
     the trailing N, and the surviving state reads identically."""
+    monkeypatch.setattr(MV, "_VACUUM_KEEP_LAST", 1)
     docs = table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     stream_dir = str(tmp_path / "vac_stream")
     for pred in _splits():
         docs.where(pred).coalesce(1).write.mode("append").parquet(stream_dir)
         time.sleep(1.05)
     state_dir = str(tmp_path / "vac_state")
-    _drain(spark, stream_dir, state_dir, str(tmp_path / "vac_ckpt"),
-           vacuum_keep_last=1)
+    _drain(spark, stream_dir, state_dir, str(tmp_path / "vac_ckpt"))
     store = MV._store(spark, state_dir)
     assert store._versions_on_disk() == [2]  # only the latest survives
     kll_state, _, _ = MV._read_state(spark, store)

@@ -1,5 +1,5 @@
-"""Write-audit-publish snapshot store: atomic pointer flip, failed-audit
-rollback, time travel, vacuum."""
+"""Write-audit-publish snapshot store: atomic rename claim, failed-audit
+rollback, time travel, optimistic concurrency, vacuum."""
 
 from __future__ import annotations
 
@@ -9,14 +9,17 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from les_etl_pipeline_spark.sinks.snapshot_store import SnapshotStore
+from les_etl_pipeline_spark.sinks.snapshot_store import (
+    EXPECT_EMPTY,
+    SnapshotStore,
+)
 
 
-@pytest.fixture(params=["rename", "marker"])
-def store(spark, tmp_path, request):
-    """Every contract test runs under BOTH commit protocols: the POSIX
-    rename claim and the object-store-safe marker-file claim."""
-    return SnapshotStore(spark, str(tmp_path / "tbl"), protocol=request.param)
+@pytest.fixture(params=["rename"])
+def store(spark, tmp_path):
+    """A fresh store; the ``[rename]`` id names its one commit point,
+    the rename of a staging dir onto its version slot."""
+    return SnapshotStore(spark, str(tmp_path / "tbl"))
 
 
 def test_publish_read_roundtrip(spark, store):
@@ -47,16 +50,6 @@ def test_failed_audit_leaves_store_untouched(spark, store):
     # next good publish lands cleanly and is readable
     v = store.publish(spark.range(7), audit=lambda df: df.count() == 7)
     assert v > 0 and store.read().count() == 7
-
-
-def test_pointer_flip_is_all_or_nothing(spark, store):
-    store.publish(spark.range(3))
-    ptr = os.path.join(store.root, "_CURRENT")
-    with open(ptr) as f:
-        meta = json.load(f)
-    assert meta["version"] == 0
-    # no temp pointer litter after publish
-    assert not [n for n in os.listdir(store.root) if n.startswith("._current")]
 
 
 def test_vacuum_keeps_current_and_recent(spark, store):
@@ -225,147 +218,10 @@ def test_vacuum_never_sweeps_live_staging_of_inflight_publish(spark, store):
 def test_claim_reraises_persistent_rename_failure(spark, tmp_path):
     """ADVICE r9 medium: a staging dir that is GONE (e.g. swept) must
     fail loudly, not spin the blind-write retry loop forever."""
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="rename")
+    store = SnapshotStore(spark, str(tmp_path / "tbl"))
     store.publish(spark.range(1))
     with pytest.raises(OSError):
         store._claim(os.path.join(store.root, ".tx-gone000000"), None)
-
-
-def test_marker_claim_fails_loud_when_staging_gone(spark, tmp_path):
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    store.publish(spark.range(1))
-    with pytest.raises(FileNotFoundError):
-        store._claim(os.path.join(store.root, ".tx-gone000000"), None)
-
-
-def test_marker_protocol_object_store_semantics(spark, tmp_path):
-    """VERDICT r9 #2: run the marker protocol with the layout move
-    replaced by COPY+DELETE (what rename actually is on GCS/S3). The
-    commit point is the exclusive-create marker, so correctness must be
-    unaffected: two racing blind writers serialize, nothing lost."""
-    import shutil as _shutil
-    import threading
-
-    class ObjectStoreSim(SnapshotStore):
-        def _move(self, src, dst):  # non-atomic, like an object store
-            _shutil.copytree(src, dst)
-            _shutil.rmtree(src)
-
-    store = ObjectStoreSim(spark, str(tmp_path / "tbl"), protocol="marker")
-    results, errors = [], []
-
-    def writer(tag):
-        try:
-            for i in range(3):
-                v = store.publish(
-                    spark.createDataFrame([(tag, i)], "writer string, i int")
-                )
-                results.append((tag, i, v))
-        except Exception as e:  # pragma: no cover
-            errors.append(e)
-
-    t1 = threading.Thread(target=writer, args=("a",))
-    t2 = threading.Thread(target=writer, args=("b",))
-    t1.start(); t2.start(); t1.join(); t2.join()
-    assert not errors
-    assert sorted(v for _, _, v in results) == list(range(6))
-    assert store.current_version() == 5
-    for tag, i, v in results:
-        assert [tuple(r) for r in store.read(v).collect()] == [(tag, i)]
-
-
-def test_marker_crash_before_layout_self_heals(spark, tmp_path):
-    """Crash window: marker created (commit happened) but the data move
-    never ran. The commit must be durable — current_version sees it and
-    the first reader finalizes the layout from the surviving staging."""
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    store.publish(spark.range(3))
-
-    crashed = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    crashed._finalize = lambda v: True  # simulate dying right after claim
-
-    crashed.publish(spark.range(9))
-    assert not os.path.isdir(os.path.join(store.root, "v=1"))  # layout missing
-    assert store.current_version() == 1  # but the commit is visible
-    assert store.read().count() == 9  # reader self-heals the move
-    assert os.path.isdir(os.path.join(store.root, "v=1"))
-    # and vacuum would have healed it too (idempotent)
-    store.vacuum()
-    assert store.read(1).count() == 9
-
-
-def test_torn_legacy_marker_does_not_hide_good_versions(spark, tmp_path):
-    """ADVICE r10 low: a legacy claim crashed between exclusive-create
-    and body write leaves an EMPTY marker. It claims its slot (never
-    reused) but is NOT a commit: current_version must keep serving the
-    newest readable version instead of pointing at permanently
-    unreachable data."""
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    store.publish(spark.range(3))
-    # simulate the legacy torn claim at slot 1
-    open(os.path.join(store.root, "commit-v=1"), "w").close()
-    assert store.current_version() == 0  # torn claim is not a commit
-    assert store.read().count() == 3  # newest COMMITTED data readable
-    v = store.publish(spark.range(7))
-    assert v == 2  # the torn slot stays claimed, never reused
-    assert store.current_version() == 2
-    assert store.read().count() == 7
-    # once superseded, vacuum clears the torn debris
-    store.vacuum(keep_last=1)
-    assert not os.path.exists(os.path.join(store.root, "commit-v=1"))
-
-
-def test_marker_claim_atomic_and_tmp_debris_swept(spark, tmp_path):
-    """The marker claim is link-atomic: every marker that exists is
-    complete (readable JSON naming its staging), and a lost race leaves
-    no temp debris. Crash debris that does appear (kill -9 between
-    mkstemp and link) is dot-prefixed and vacuumed past the grace."""
-    import time as _time
-
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    for i in range(3):
-        store.publish(spark.range(i + 1))
-    for name in os.listdir(store.root):
-        if name.startswith("commit-v="):
-            with open(os.path.join(store.root, name)) as f:
-                assert json.load(f)["staging"].startswith(".tx-")
-    assert not [n for n in os.listdir(store.root) if n.startswith("._marker.")]
-    debris = os.path.join(store.root, "._marker.crashed0")
-    with open(debris, "w") as f:
-        f.write('{"staging": ".tx-never"}')
-    store.vacuum()  # fresh: inside grace, survives
-    assert os.path.exists(debris)
-    old = _time.time() - 7200
-    os.utime(debris, (old, old))
-    store.vacuum()
-    assert not os.path.exists(debris)
-
-
-def test_vacuum_grace_boundary_never_sweeps_claimed_staging(spark, tmp_path):
-    """VERDICT r10 #6: a staging dir referenced by a claimed-but-
-    unfinalized marker holds COMMITTED data — even aged far past the
-    grace window, a concurrent vacuum must finalize it into its version
-    dir, never sweep it."""
-    import time as _time
-
-    store = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    store.publish(spark.range(3))
-    crashed = SnapshotStore(spark, str(tmp_path / "tbl"), protocol="marker")
-    crashed._finalize = lambda v: True  # die right after the claim
-    crashed.publish(spark.range(9))
-    staging = [n for n in os.listdir(store.root) if n.startswith(".tx-")]
-    assert len(staging) == 1
-    # age the claimed staging (whole tree) way past the 1h grace
-    old = _time.time() - 7200
-    for dirpath, dirnames, filenames in os.walk(
-        os.path.join(store.root, staging[0]), topdown=False
-    ):
-        for n in dirnames + filenames:
-            os.utime(os.path.join(dirpath, n), (old, old))
-        os.utime(dirpath, (old, old))
-    store.vacuum()
-    assert store.read(1).count() == 9  # finalized, not swept
-    assert os.path.isdir(os.path.join(store.root, "v=1"))
 
 
 def test_vacuum_keeps_staging_of_long_running_build(spark, store):
@@ -395,3 +251,47 @@ def test_vacuum_keeps_staging_of_long_running_build(spark, store):
     os.utime(os.path.join(nested, "part-1.parquet"), (old, old))
     store.vacuum()
     assert not os.path.exists(staging)  # fully idle past grace: swept
+
+
+def _store_vacuumed_past_invalid_claim(spark, root):
+    """v0-v4 by CAS; v5 a claim composed over v3 that lost the compose/
+    claim race to v4 (so the validity chain skips it); v6 a valid CAS
+    over v4 holding partitions a and c; then ``vacuum(keep_last=2)``."""
+    store = SnapshotStore(spark, root)
+    for ev in (EXPECT_EMPTY, 0, 1, 2, 3):
+        store.publish_dir(lambda staging: None, expected_version=ev)
+    stale = os.path.join(root, "v=5")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "_TX_META"), "w") as f:
+        json.dump({"touched": ["p=a"], "partition_by": "p",
+                   "depends_on": 3, "read_version": 3}, f)
+    with open(os.path.join(stale, "_COMMITTED"), "w") as f:
+        f.write("1")
+    df = spark.createDataFrame([("a", 1), ("c", 3)], "p string, x long")
+    assert store.publish(df, partition_by="p", expected_version=4) == 6
+    store.vacuum(keep_last=2)
+    return store
+
+
+def test_vacuum_past_invalidated_claim_keeps_cas_working(spark, tmp_path):
+    """Vacuum drops every claim below the oldest chain version it keeps,
+    so an invalid claim never becomes the lowest survivor and the chain
+    still ends at the current version; CAS publishes keep committing."""
+    store = _store_vacuumed_past_invalid_claim(spark, str(tmp_path / "tbl"))
+    assert store.current_version() == max(store._committed_chain()) == 6
+    assert store.publish_dir(lambda staging: None, expected_version=6) == 7
+    assert store.current_version() == 7
+
+
+def test_vacuum_past_invalidated_claim_keeps_partition_publish_working(
+    spark, tmp_path
+):
+    """The dedup/gapfill pattern after the same vacuum: a partition
+    publish at ``read_version=current_version()`` commits, composed over
+    the current version's content."""
+    store = _store_vacuumed_past_invalid_claim(spark, str(tmp_path / "tbl"))
+    df = spark.createDataFrame([("b", 2)], "p string, x long")
+    v = store.publish_partitions(df, "p", read_version=store.current_version())
+    assert v == 7 and store.current_version() == 7
+    got = {(r.p, r.x) for r in store.read().select("p", "x").collect()}
+    assert got == {("a", 1), ("b", 2), ("c", 3)}

@@ -1058,8 +1058,7 @@ def test_drain_crash_after_ledger_commit_is_rescued_by_maintenance_fold(
 
     real_txn = SA._epoch_txn
 
-    def txn_crashing_before_pointer(spark_, index_dir_, work,
-                                    max_attempts=10, before_publish=None):
+    def txn_crashing_before_pointer(spark_, index_dir_, work, before_publish=None):
         # replicate the txn up to (and including) the ledger commit,
         # then die where the pointer CAS would have run
         work(SA._index_root(spark_, index_dir_))
@@ -1140,8 +1139,7 @@ def test_drain_crash_during_compaction_is_rescued_by_fold(
 
     real_txn = SA._epoch_txn
 
-    def txn_crashing_before_pointer(spark_, index_dir_, work,
-                                    max_attempts=10, before_publish=None):
+    def txn_crashing_before_pointer(spark_, index_dir_, work, before_publish=None):
         work(SA._index_root(spark_, index_dir_))
         if before_publish is not None:
             before_publish()
