@@ -18,6 +18,9 @@ rename of a staging dir onto its version slot.
   ``dst -> dst.old``, ``staging -> dst``, drop ``dst.old``; ``recover``
   repairs a swap that crashed between any two of those steps. Single
   writer per ``dst`` (the compactors' maintenance contract).
+- ``remove_dir``: retiring a directory readers may list. One
+  ``os.rename`` to a hidden name, then the delete, so readers see the
+  directory whole or absent, never half deleted.
 """
 
 from __future__ import annotations
@@ -87,3 +90,15 @@ def recover(dst: str) -> None:
         os.rename(staging if os.path.exists(staging) else backup, dst)
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(backup, ignore_errors=True)
+
+
+def remove_dir(path: str, trash: str) -> None:
+    """Remove the directory ``path`` in one atomic step: rename it to
+    ``trash`` (a hidden name on the same filesystem that its owner's
+    debris sweep knows), then delete that. A ``path`` already gone is a
+    no-op; a crash before the delete leaves only ``trash``."""
+    try:
+        os.rename(path, trash)
+    except FileNotFoundError:
+        return
+    shutil.rmtree(trash, ignore_errors=True)

@@ -74,7 +74,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .atomic import write_json
+from .atomic import remove_dir, write_json
 
 COMMITTED = "_COMMITTED"
 #: per-version commit metadata inside the version dir: {"depends_on":
@@ -166,8 +166,9 @@ class SnapshotStore:
           claim race — is thereby inert: deterministically skipped by
           everyone, including its own writer's post-win check.
 
-        Vacuum compaction: vacuum drops every claim below the oldest
-        chain version it keeps, so the lowest surviving claim is a chain
+        Vacuum compaction: vacuum removes claims only below a chain
+        version it keeps, each in one atomic step and in the order of
+        ``_drop_below``, so the lowest surviving claim is always a chain
         member; when it is conditional its ``depends_on`` points below
         every surviving claim, and it seeds the chain."""
         claims = self._versions_on_disk()
@@ -183,7 +184,9 @@ class SnapshotStore:
 
     def current_version(self) -> int | None:
         """Highest valid committed version (see ``_committed_chain``).
-        Monotone under any writer race because claims are immutable."""
+        Monotone under racing writers, because claims are immutable, and
+        under a running or crashed vacuum, because vacuum never removes
+        a claim in a way that changes the chain above what it keeps."""
         chain = self._committed_chain()
         return chain[-1] if chain else None
 
@@ -573,11 +576,32 @@ class SnapshotStore:
                     continue
         return newest
 
+    def _drop(self, version: int) -> None:
+        """Remove one claimed slot in one atomic step, so no reader sees
+        it half removed (``_COMMITTED`` gone while the slot still sets
+        the chain's floor, or ``_TX_META`` gone so a conditional claim
+        reads as unconditional). The trash is a staging name, so a crash
+        mid-delete leaves debris that a later vacuum sweeps."""
+        remove_dir(os.path.join(self.root, f"v={version}"), self._staging_dir())
+
+    def _drop_below(self, keep_from: int) -> list[int]:
+        """Drop every claim below ``keep_from``, a chain version: first
+        the claims the chain skips, then the chain's own versions
+        ascending. Every state a reader can see, or a crash can leave,
+        then has a chain member as its lowest claim, so the chain from
+        ``keep_from`` up never changes. Returns the dropped versions,
+        ascending."""
+        claimed = [v for v in self._versions_on_disk() if v < keep_from]
+        chain = set(self._committed_chain())
+        for v in sorted(claimed, key=lambda v: (v in chain, v)):
+            self._drop(v)
+        return claimed
+
     def vacuum(self, keep_last: int = 2, tx_grace_seconds: float = 3600.0) -> list[int]:
         """Keep the last ``keep_last`` versions of the validity chain
         (never fewer than the current one) and drop every claim below
-        the oldest of them, valid or not, so the lowest surviving claim
-        is always a chain member and the chain stays whole. Claims above
+        the oldest of them, valid or not (``_drop_below``), so the chain
+        stays whole while vacuum runs and after it stops. Claims above
         it that the chain skips (compose/claim race losers) and
         dot-prefixed staging debris from crashed publishes go once they
         age past ``tx_grace_seconds``. Returns the dropped versions
@@ -605,21 +629,16 @@ class SnapshotStore:
                 shutil.rmtree(path, ignore_errors=True)
         # list the claims BEFORE walking the chain: a claim that lands
         # after this listing is left alone, valid or not
-        claimed = self._versions_on_disk()
         committed = self._versions_on_disk(committed_only=True)
         chain = self._committed_chain()
         if not chain:
             return []
-        oldest_kept = chain[-max(keep_last, 1):][0]
-        dropped = [v for v in claimed if v < oldest_kept]
-        for v in dropped:
-            shutil.rmtree(os.path.join(self.root, f"v={v}"), ignore_errors=True)
+        dropped = self._drop_below(chain[-max(keep_last, 1):][0])
         for v in set(committed) - set(chain) - set(dropped):
-            path = os.path.join(self.root, f"v={v}")
             try:
-                age = now - os.path.getmtime(path)
+                age = now - os.path.getmtime(os.path.join(self.root, f"v={v}"))
             except OSError:
                 continue
             if age >= tx_grace_seconds:
-                shutil.rmtree(path, ignore_errors=True)
+                self._drop(v)
         return dropped

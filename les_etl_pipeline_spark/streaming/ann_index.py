@@ -711,8 +711,6 @@ def vacuum_index_state(spark, index_dir: str) -> list[int]:
     it) stay. NEVER use the raw ``SnapshotStore.vacuum`` on an index
     state store: its keep-last-N policy can drop a data generation that
     newer pointer epochs still reference. Returns dropped versions."""
-    import shutil
-
     state = os.path.join(index_dir, "state")
     if not os.path.isdir(state):
         return []
@@ -720,10 +718,6 @@ def vacuum_index_state(spark, index_dir: str) -> list[int]:
     cur = store.current_version()
     if cur is None:
         return []
-    floor = _generation_id(_generation_path(store, cur))
-    dropped = []
-    for v in store._versions_on_disk():
-        if v < floor:
-            shutil.rmtree(os.path.join(state, f"v={v}"), ignore_errors=True)
-            dropped.append(v)
-    return dropped
+    # the live generation is a chain version, so the store's ordered,
+    # one-step-per-slot drop keeps the epoch chain whole throughout
+    return store._drop_below(_generation_id(_generation_path(store, cur)))

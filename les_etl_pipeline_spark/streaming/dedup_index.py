@@ -361,7 +361,7 @@ def dedup_index_sink(
             )
             out = upd.unionByName(new_rows.withColumn("bkt", bkt))
             store.publish_partitions(out, "bkt", read_version=cur_v)
-            store.vacuum(keep_last=2)
+            store.vacuum()
         xo.commit(index_dir, key, batch_id)
 
     q = (

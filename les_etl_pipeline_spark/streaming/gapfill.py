@@ -289,7 +289,7 @@ def gapfill_upsert_sink(
                 ))
             )
             store.publish_partitions(out, "bkt", read_version=cur_v)
-            store.vacuum(keep_last=2)
+            store.vacuum()
         xo.commit(index_dir, key, batch_id)
 
     q = (

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -295,3 +296,48 @@ def test_vacuum_past_invalidated_claim_keeps_partition_publish_working(
     assert v == 7 and store.current_version() == 7
     got = {(r.p, r.x) for r in store.read().select("p", "x").collect()}
     assert got == {("a", 1), ("b", 2), ("c", 3)}
+
+
+@pytest.mark.parametrize("torn", [False, True], ids=["clean", "torn"])
+@pytest.mark.parametrize("done", range(5))
+def test_vacuum_interrupted_mid_drop_keeps_chain(tmp_path, monkeypatch, done, torn):
+    """A vacuum that dies after ``done`` of its five drops — the
+    interrupted delete having removed ``_COMMITTED`` first (``torn``) or
+    nothing — leaves the chain whole: v0-v3, v5, v6 by CAS, with an
+    invalid claim at v4 composed over v2 that the chain skips. The
+    current version stays v6 and a CAS over v6 commits."""
+    root = str(tmp_path / "tbl")
+    store = SnapshotStore(None, root)
+    for ev in (EXPECT_EMPTY, 0, 1, 2):
+        store.publish_dir(lambda staging: None, expected_version=ev)
+    stale = os.path.join(root, "v=4")
+    os.makedirs(stale)
+    with open(os.path.join(stale, "_TX_META"), "w") as f:
+        json.dump({"touched": None, "partition_by": None, "depends_on": 2}, f)
+    with open(os.path.join(stale, "_COMMITTED"), "w") as f:
+        f.write("1")
+    assert store.publish_dir(lambda staging: None, expected_version=3) == 5
+    assert store.publish_dir(lambda staging: None, expected_version=5) == 6
+    assert store._committed_chain() == [0, 1, 2, 3, 5, 6]
+
+    real_rmtree = shutil.rmtree
+    calls = []
+
+    def dying_rmtree(path, ignore_errors=False):
+        calls.append(path)
+        if len(calls) <= done:
+            return real_rmtree(path, ignore_errors=ignore_errors)
+        if torn and os.path.exists(os.path.join(path, "_COMMITTED")):
+            os.remove(os.path.join(path, "_COMMITTED"))
+        raise OSError("vacuum killed mid-drop")
+
+    monkeypatch.setattr(shutil, "rmtree", dying_rmtree)
+    with pytest.raises(OSError, match="mid-drop"):
+        store.vacuum(keep_last=2)
+    monkeypatch.undo()
+    assert store.current_version() == 6
+    assert store._committed_chain()[-2:] == [5, 6]
+    assert store.publish_dir(lambda staging: None, expected_version=6) == 7
+    assert store.vacuum(keep_last=2, tx_grace_seconds=0)[-1] == 5
+    assert store._committed_chain() == [6, 7]
+    assert sorted(os.listdir(root)) == ["v=6", "v=7"]
